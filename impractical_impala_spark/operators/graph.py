@@ -1,20 +1,21 @@
-"""Connected components — the cluster-formation step a dedup pipeline
-runs after near-dup PAIR generation (keep one representative per
-duplicate cluster). Spark has no builtin; this is the custom-operator
-rule (a) composition: Pregel-style min-label propagation, one shuffle
-per round.
+"""Graph fixpoints: connected components (the cluster-formation step a
+dedup pipeline runs after near-dup PAIR generation) and h-index
+coreness (every k-core statistic). Spark has no builtin for either;
+both are the custom-operator rule (a) composition: one join + groupBy
+per round, hash-partitioned on the node id, no driver-side data, run
+to the fixpoint by the shared ``_fixpoint`` loop below.
 
-Scale shape: each round is join(edges, labels) + groupBy-min — all
-hash-partitioned on the node id, no driver-side data. Rounds needed =
-component diameter, and near-dup clusters are shallow (a duplicate
-cluster's diameter is small by construction — every member overlaps the
-same content); the large-star/small-star variants that halve diameter
-per round only pay off on deep web-graph-like components.
+Rounds needed = component diameter for CC, and near-dup clusters are
+shallow (every member overlaps the same content); the
+large-star/small-star variants that halve diameter per round only pay
+off on deep web-graph-like components.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -30,107 +31,84 @@ def _drop_checkpoint(df: DataFrame) -> None:
         pass  # non-LogicalRDD plan or API drift: ContextCleaner handles it
 
 
+def _fixpoint(init: DataFrame, step: Callable[[DataFrame], DataFrame],
+              col: str, max_iter: int, what: str) -> DataFrame:
+    """Iterate ``step`` from ``init`` until a round changes nothing and
+    return that round's frame (localCheckpointed; the caller owns its
+    blocks). Raises after ``max_iter`` rounds rather than returning a
+    silently unconverged result.
+
+    ``col`` must be pointwise non-increasing from round to round over a
+    fixed key set, so an unchanged sum of it means an unchanged frame.
+    Each round is ONE action, the round's localCheckpoint: the sum
+    rides on its jobs through ``DataFrame.observe`` instead of a
+    second count or aggregate action. It is an exact decimal(38,0)
+    sum — an int64 sum wraps silently with ANSI off, and a double one
+    cannot see a change of 1 in ids near 2^62.
+
+    localCheckpoint (not cache): each round's plan references the
+    previous round's, so without truncating lineage the logical plan
+    grows exponentially with rounds and the DRIVER dies on plan
+    bookkeeping long before any executor breaks a sweat. On a real
+    cluster swap for a reliable checkpoint dir if executor loss
+    mid-algorithm must be survivable."""
+    def run(df: DataFrame) -> tuple[DataFrame, object]:
+        obs = Observation()
+        out = (df.observe(obs, F.sum(F.col(col).cast("decimal(38,0)"))
+                          .alias("s"))
+               .localCheckpoint(eager=True))
+        return out, obs.get["s"]
+
+    cur, tot = run(init)
+    # try/finally: each superseded round's blocks are dropped eagerly,
+    # and the live one on the max_iter raise or an exception too
+    try:
+        for _ in range(max_iter):
+            nxt, ntot = run(step(cur))
+            _drop_checkpoint(cur)
+            cur = nxt
+            if ntot == tot:
+                out, cur = cur, None
+                return out
+            tot = ntot
+    finally:
+        if cur is not None:
+            _drop_checkpoint(cur)
+    raise RuntimeError(f"{what} did not converge in {max_iter} rounds")
+
+
 def connected_components(edges: DataFrame, src: str, dst: str,
                          max_iter: int = 15) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the
     smallest node id reachable from it (= component id). Returns
     ``(node, component)``, one row per distinct node.
 
-    Deterministic: labels are ids, propagation is min(), convergence is
-    exact — no float or ordering sensitivity, so the result is
-    hash-stable and oracle-checkable against a recursive-CTE transitive
-    closure. Raises if ``max_iter`` rounds don't reach the fixpoint
-    (diameter larger than max_iter) rather than returning a silently
-    unconverged clustering.
+    Pregel-style min-label propagation: a node's label is the min of
+    its own and its neighbours', so labels only decrease and the label
+    sum is an exact convergence test (``_fixpoint``). Deterministic:
+    labels are ids, propagation is min() — no float or ordering
+    sensitivity, so the result is hash-stable and oracle-checkable
+    against a recursive-CTE transitive closure. Raises if ``max_iter``
+    rounds (the component diameter) don't reach the fixpoint.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
         .distinct().cache()
-    # localCheckpoint (not cache): each round's plan references the
-    # previous round's, so without truncating lineage the logical plan
-    # grows exponentially with rounds and the DRIVER dies on plan
-    # bookkeeping long before any executor breaks a sweat. On a real
-    # cluster swap for a reliable checkpoint dir if executor loss
-    # mid-algorithm must be survivable.
-    labels = sym.select(F.col("a").alias("node")).distinct() \
-        .withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
-    # try/finally: sym must not outlive the loop on ANY exit path, and
-    # each superseded round's checkpoint blocks are dropped eagerly so a
-    # long-lived session running many component jobs doesn't accumulate
-    # executor storage until RDD GC gets around to it.
+
+    def step(labels: DataFrame) -> DataFrame:
+        prop = (sym.join(labels, sym.a == labels.node)
+                .select(F.col("b").alias("node"), "lbl"))
+        return (prop.unionByName(labels.select("node", "lbl"))
+                .groupBy("node").agg(F.min("lbl").alias("lbl")))
+
+    init = sym.select(F.col("a").alias("node")).distinct() \
+        .withColumn("lbl", F.col("node"))
     try:
-        for _ in range(max_iter):
-            prop = (
-                sym.join(labels, sym.a == labels.node)
-                .select(F.col("b").alias("node"), "lbl")
-            )
-            new_labels = (
-                prop.unionByName(labels.select("node", "lbl"))
-                .groupBy("node").agg(F.min("lbl").alias("lbl"))
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new_labels.join(labels.withColumnRenamed("lbl", "old"), "node")
-                .filter(F.col("lbl") != F.col("old")).count()
-            )
-            prev, labels = labels, new_labels
-            _drop_checkpoint(prev)
-            if changed == 0:
-                return labels.select("node", F.col("lbl").alias("component"))
+        labels = _fixpoint(init, step, "lbl", max_iter,
+                           "connected_components")
     finally:
         sym.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(component diameter exceeds max_iter)")
-
-
-def _peel(e0: DataFrame, k: int, max_iter: int, *,
-          n_edges_in: int | None = None,
-          keep_frame: bool = False) -> tuple:
-    """Peel to the k-core fixpoint of the cached edge frame ``e0``.
-    Returns (n_nodes, n_edges) of the surviving subgraph — plus the
-    fixpoint edge frame (localCheckpointed; the CALLER owns its blocks)
-    when ``keep_frame``.
-
-    Optimization r15: the edge count of the current frame is carried
-    FORWARD between rounds (round N's ``nxt.count()`` is round N+1's
-    ``n_cur``) instead of re-counted, halving the non-checkpoint job
-    count per round; ``n_edges_in`` lets a caller that already knows
-    ``count(e0)`` (the nested-core binary search below) skip the
-    initial count job too. Fixpoint detection is unchanged: nxt is a
-    subset of cur by construction, so count equality still means set
-    equality."""
-    cur = e0.localCheckpoint(eager=True)
-    n_cur = cur.count() if n_edges_in is None else n_edges_in
-    # try/finally: the CURRENT round's checkpoint blocks are released on
-    # every exit path — converged return AND the max_iter raise (which
-    # previously leaked cur's blocks until RDD GC).
-    try:
-        for _ in range(max_iter):
-            deg = (cur.select(F.col("a").alias("u"))
-                   .unionByName(cur.select(F.col("b").alias("u")))
-                   .groupBy("u").agg(F.count(F.lit(1)).alias("d")))
-            keep = deg.filter(F.col("d") >= k).select("u")
-            nxt = (cur.join(keep.withColumnRenamed("u", "a"), "a", "left_semi")
-                   .join(keep.withColumnRenamed("u", "b"), "b", "left_semi")
-                   .select("a", "b").localCheckpoint(eager=True))
-            n_nxt = nxt.count()
-            _drop_checkpoint(cur)
-            cur = nxt
-            if n_nxt == n_cur:
-                n_nodes = (cur.select(F.col("a").alias("u"))
-                           .unionByName(cur.select(F.col("b").alias("u")))
-                           .distinct().count())
-                if keep_frame:
-                    out, cur = cur, e0  # caller owns the fixpoint blocks
-                    return n_nodes, n_nxt, out
-                return n_nodes, n_nxt
-            n_cur = n_nxt
-    finally:
-        if cur is not e0:
-            _drop_checkpoint(cur)
-    raise RuntimeError(
-        f"k-core peel: k={k} did not stabilize in {max_iter} rounds")
+    return labels.select("node", F.col("lbl").alias("component"))
 
 
 def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
@@ -146,23 +124,17 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
 
     c_t is pointwise non-increasing (H of n values <= n, and H is
     monotone in its inputs, so by induction from c_0 = degree) and
-    converges exactly to the coreness. Every k-core statistic then
+    converges exactly to the coreness — so the core sum is an exact
+    convergence test (``_fixpoint``). Every k-core statistic then
     reads off the fixpoint WITHOUT re-peeling: the k-core is the
     subgraph induced by {v : core(v) >= k}, so n_nodes(k) = #{core >=
     k} and n_edges(k) = #{(a,b) : min(core(a), core(b)) >= k}, and the
-    degeneracy k* = max coreness (optimization r16 — replaces the
-    per-k / binary-searched peel loops of r15, guide §1.2/§2.4: one
-    iterative job chain instead of O(#ks) or O(log maxdeg) of them).
+    degeneracy k* = max coreness.
 
     Returns (node, core). Scale shape: each round is one join of the
     static symmetrized edge list against the current (node, core)
-    frame plus one groupBy whose per-group state is O(max degree) —
-    the same bound as the peel's degree aggregation; lineage truncates
-    per round (localCheckpoint, the connected_components discipline),
-    and the convergence scalar is sum(core), exact on int64 and
-    strictly decreasing until the fixpoint (c is pointwise
-    non-increasing, so sum equality <=> pointwise equality). Raises
-    after ``max_iter`` rounds rather than returning a silently
+    frame plus one groupBy whose per-group state is O(max degree).
+    Raises after ``max_iter`` rounds rather than returning a silently
     unconverged labeling. The h-index itself is pure codegen: sort the
     collected neighbor values descending, count prefix positions i
     (1-based) with value >= i."""
@@ -173,31 +145,19 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
            .localCheckpoint(eager=True))
     hidx = ("cast(size(filter(transform(sort_array(cs, false),"
             " (x, i) -> x >= i + 1), p -> p)) as bigint)")
-    cores = (sym.groupBy(F.col("u").alias("node"))
-             .agg(F.count(F.lit(1)).alias("c"))
-             .localCheckpoint(eager=True))
-    tot = cores.groupBy().sum("c").first()[0]
+
+    def step(cores: DataFrame) -> DataFrame:
+        return (sym.join(cores, sym.v == cores.node)
+                .groupBy(F.col("u").alias("node"))
+                .agg(F.collect_list("c").alias("cs"))
+                .select("node", F.expr(hidx).alias("c")))
+
+    degree = (sym.groupBy(F.col("u").alias("node"))
+              .agg(F.count(F.lit(1)).alias("c")))
     try:
-        for _ in range(max_iter):
-            nxt = (sym.join(cores, sym.v == cores.node)
-                   .groupBy(F.col("u").alias("node"))
-                   .agg(F.collect_list("c").alias("cs"))
-                   .select("node", F.expr(hidx).alias("c"))
-                   .localCheckpoint(eager=True))
-            ntot = nxt.groupBy().sum("c").first()[0]
-            prev, cores = cores, nxt
-            _drop_checkpoint(prev)
-            if ntot == tot:  # sum fixpoint == pointwise fixpoint
-                out, cores = cores, None
-                return out
-            tot = ntot
+        return _fixpoint(degree, step, "c", max_iter, "coreness")
     finally:
-        if cores is not None:
-            _drop_checkpoint(cores)
         _drop_checkpoint(sym)
-    raise RuntimeError(
-        f"coreness: h-index iteration did not converge in {max_iter} "
-        "rounds")
 
 
 def _edge_min_core(edges: DataFrame, cores: DataFrame) -> DataFrame:
@@ -212,25 +172,19 @@ def _edge_min_core(edges: DataFrame, cores: DataFrame) -> DataFrame:
 def k_core_summary(edges: DataFrame, ks: tuple[int, ...],
                    max_iter: int = 100) -> DataFrame:
     """k-core sizes of the undirected graph ``edges(a, b)``: for each
-    k, iteratively peel nodes of degree < k until the fixpoint, then
-    report the surviving subgraph's node and edge counts. One row per
-    k: (k, n_nodes, n_edges).
+    k, the node and edge counts of the subgraph left after peeling
+    nodes of degree < k to the fixpoint. One row per k: (k, n_nodes,
+    n_edges).
 
-    Scale shape: every round is degrees = groupBy(node).count over the
-    CURRENT edge set followed by a semi-join filter — all
-    hash-partitioned on node id, no driver-side data. The peel is
-    inherently iterative, so this operator is rows-only for the oracle
-    harness; the Python reference peel in the tests pins its semantics.
-
-    Optimization r16 (replacing r15's chained ascending-k peels): ONE
-    h-index coreness fixpoint (see ``coreness``) followed by one
+    ONE h-index coreness fixpoint (see ``coreness``) followed by one
     conditional-count aggregation over the node cores and one over the
     edge min-cores — every k's sizes in two jobs, however many ks are
-    asked for. Value-identical to per-k peeling: the k-core is the
-    subgraph induced by {core >= k}, and for k >= 1 every member has
-    an incident core edge, so the peel's endpoint-distinct node count
-    equals #{core >= k}. Pinned vs the Python reference peel and the
-    old chained peels in tests/test_r16_opt.py."""
+    asked for, all hash-partitioned on node id with no driver-side
+    data. Value-identical to per-k peeling: the k-core is the subgraph
+    induced by {core >= k}, and for k >= 1 every member has an
+    incident core edge, so the peel's endpoint-distinct node count
+    equals #{core >= k}. Pinned vs the Python and Spark reference
+    peels in tests/test_r16_opt.py."""
     e0 = edges.select(F.col("a"), F.col("b")).distinct().localCheckpoint(
         eager=True)
     try:

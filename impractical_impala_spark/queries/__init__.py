@@ -717,6 +717,12 @@ CHANGED_THIS_ROUND: dict[str, int] = {
     # events_ljung_box_value twin and the 29th/30th streaming
     # finalizers.
     "events_ljung_box": 15,
+    # Round 16 (as-of 16): graph_modularity_by_type's ORACLE coalesces
+    # m_in in a CTE before the contribution reads it; in one SELECT the
+    # contribution bound within.m_in, NULL for a group with no internal
+    # edges (sf0.001), where Spark rightly gives the -d^2/4m^2 term.
+    # The Spark plan is unchanged.
+    "graph_modularity_by_type": 16,
 }
 
 from ..registry import registered_names  # noqa: E402

@@ -514,10 +514,11 @@ FROM ranked WHERE rn = 1
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER formation: connected components over the
     verified minhash-LSH pairs (operators/graph.py min-label
-    propagation; convergence checks run driver-side counts — model-size
-    scalars, the corpus stays distributed). cluster_id = smallest
-    doc_id in the component; n_members sizes each cluster so a
-    downstream keep-one-representative filter is a plain predicate.
+    propagation; each round's convergence test is one exact label-sum
+    scalar observed on its checkpoint — the corpus stays distributed).
+    cluster_id = smallest doc_id in the component; n_members sizes
+    each cluster so a downstream keep-one-representative filter is a
+    plain predicate.
     Oracle: recursive-CTE transitive closure over the same pair SQL."""
     from pyspark.sql import Window
 

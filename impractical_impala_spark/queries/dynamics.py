@@ -375,12 +375,16 @@ within AS (
     FROM (SELECT a AS u, ga AS g FROM ed
           UNION ALL SELECT b, gb FROM ed)
     GROUP BY 1
-), per_g AS (
+), gm AS (
     SELECT deg.g, deg.n_nodes, deg.dg,
-           COALESCE(within.m_in, 0) AS m_in, m_tot.m,
-           {_GM_CONTRIB} AS q_nano
+           COALESCE(within.m_in, 0) AS m_in, m_tot.m
     FROM deg LEFT JOIN within ON deg.g = within.g
     CROSS JOIN m_tot
+), per_g AS (
+    -- m_in is coalesced a CTE earlier: a sibling expression in gm's
+    -- SELECT would bind within.m_in, NULL for a group with no
+    -- internal edges, not the COALESCE alias
+    SELECT *, {_GM_CONTRIB} AS q_nano FROM gm
 )
 SELECT g AS dominant_type, n_nodes, m_in AS internal_edges,
        dg AS degree_sum, q_nano AS q_contrib_nano,

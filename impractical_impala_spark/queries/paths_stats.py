@@ -298,16 +298,16 @@ SELECT (SELECT COUNT(DISTINCT u) FROM (
 def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Core-structure profile of the co-activity backbone: the 2-core
     (fringe removed) and the DEGENERACY core — the innermost non-empty
-    k-core and its depth k*, binary-searched over k (log2(max_degree)
-    peels) — the cohesion companion to graph_triangles' clustering
-    signal, informative at any density where fixed k levels are not.
-    Runs operators/graph.py::degeneracy_core over the SAME
-    support-capped edge set as graph_triangles, so every scale bound
-    of cohort_edges applies unchanged. Semantics pinned against a
-    Python reference peel in tests/test_r7_kernels.py AND (since r9)
-    a full DuckDB oracle: a batch-min-degree recursive-CTE peel whose
-    equivalence to the binary-searched fixpoint is proved in the
-    oracle's comment."""
+    k-core and its depth k*, the maximum core number — the cohesion
+    companion to graph_triangles' clustering signal, informative at
+    any density where fixed k levels are not. Runs
+    operators/graph.py::degeneracy_core, which reads both rows off ONE
+    h-index coreness fixpoint, over the SAME support-capped edge set
+    as graph_triangles, so every scale bound of cohort_edges applies
+    unchanged. Semantics pinned against a Python reference peel in
+    tests/test_r7_kernels.py and tests/test_r16_opt.py AND (since r9)
+    a full DuckDB oracle: a batch-min-degree recursive-CTE peel, whose
+    comment argues its equivalence to per-k peeling."""
     from ..operators.graph import degeneracy_core
 
     return (degeneracy_core(cohort_edges(load_table(spark, sf_dir,
@@ -344,8 +344,8 @@ act AS (
 # (isolated nodes vanish with their last edge), so the recursion ends
 # by itself when the edge set empties — no iteration cap needed
 # (>=1 node leaves per round => rounds <= n_nodes; sf0.01: 54 rounds
-# over 7,788 edges, ~2 s). Equivalence to the Spark plan's
-# binary-searched k-core fixpoints (operators/graph.py::degeneracy_core):
+# over 7,788 edges, ~2 s). Equivalence to the k-cores the Spark plan
+# reads off its coreness fixpoint (operators/graph.py::degeneracy_core):
 #   * k* = max over rounds of the round-start min degree. (<=) the
 #     round achieving the max m starts from a subgraph of min degree m,
 #     so the m-core is non-empty; (>=) the innermost core H keeps all
@@ -422,7 +422,7 @@ ORDER BY level
 """
 
 register("graph_kcore_summary", graph_kcore_summary, _KCORE_ORACLE,
-         "2-core and binary-searched degeneracy core of the backbone")
+         "2-core and degeneracy core of the backbone via coreness")
 
 
 # ------------------------------------------------ BFS hop histogram

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -18,6 +19,19 @@ def spark():
     spark = get_spark("iis-tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
     yield spark
     spark.stop()
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted under a job group of
+    their own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

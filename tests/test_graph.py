@@ -1,14 +1,37 @@
-"""Unit semantics of the connected-components operator."""
+"""Unit semantics of the graph operators: connected components, the
+shared fixpoint loop under it and coreness, and the triangle and
+co-activity edge operators."""
 
 import pytest
 
 from impractical_impala_spark.operators.graph import connected_components
+
+from .conftest import spark_jobs
 
 
 def _cc(spark, edges, **kw):
     df = spark.createDataFrame(edges, "a long, b long")
     out = connected_components(df, "a", "b", **kw)
     return {r.node: r.component for r in out.collect()}
+
+
+def _union_find(edges):
+    """Driver-side component ids: the smallest node id of each
+    component, for every node that appears in ``edges``."""
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # hang the larger root under the smaller: roots are mins
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
 
 
 def test_two_components_and_a_chain(spark):
@@ -30,6 +53,13 @@ def test_raises_rather_than_returning_unconverged(spark):
     got = _cc(spark, chain)
     assert set(got.values()) == {1}
 
+    from impractical_impala_spark.operators.graph import coreness
+
+    g = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
+                              "a long, b long")  # 2 rounds
+    with pytest.raises(RuntimeError, match="coreness did not converge"):
+        coreness(g, max_iter=1)
+
 
 def test_components_match_union_find_on_random_graphs(spark):
     """Property: agree with a driver-side union-find on random graphs
@@ -42,24 +72,41 @@ def test_components_match_union_find_on_random_graphs(spark):
         rng = random.Random(seed)
         n, m = 60, 80
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        parent = list(range(n))
+        assert _cc(spark, edges) == _union_find(edges), f"seed {seed}"
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = sorted({v for e in edges for v in e})
-        want = {v: find(v) for v in touched}
-        # union-find roots are path-compressed mins per component only if
-        # we always hang the larger root under the smaller (done above)
-        got = _cc(spark, [(int(a), int(b)) for a, b in edges])
-        assert got == want, f"seed {seed}"
+def test_ids_near_2_62_converge_to_union_find(spark):
+    """The convergence sum is exact: six ids near 2^62 sum past int64
+    (which would wrap) and far past double's 53-bit mantissa, where a
+    label falling by 1 per round is invisible and a double sum would
+    stop after the first round, the chain's tail still unconverged."""
+    base = 2 ** 62
+    edges = [(base + i, base + i + 1) for i in range(5)] \
+        + [(base + 100, base + 101)]
+    got = _cc(spark, edges)
+    assert got == _union_find(edges)
+    assert set(got.values()) == {base, base + 100}
+
+
+def test_one_checkpoint_per_round(spark):
+    """Each fixpoint round is one localCheckpoint action whose own jobs
+    also carry the convergence sum (observe) — no separate changed-
+    label join+count (CC) or sum job (coreness). Pinned as Spark jobs
+    under a job group, with AQE's one job per query stage: a path of
+    n nodes takes n rounds, so one more node is one more round."""
+    def cc_jobs(n):
+        path = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "a long, b long")
+        return spark_jobs(spark, lambda: connected_components(path, "a", "b"))
+
+    three = cc_jobs(3)  # rounds: 1-2-3 -> 1-1-2 -> 1-1-1 -> unchanged
+    assert (three, cc_jobs(4) - three) == (13, 3)
+
+    from impractical_impala_spark.operators.graph import coreness
+
+    g = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
+                              "a long, b long")
+    assert spark_jobs(spark, lambda: coreness(g)) == 13
 
 
 # ----------------------------------------------- triangle operator

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .conftest import SF_ORACLE
+from .graph_refs import peel
 
 
 def _rows(df, cols):
@@ -103,8 +104,7 @@ def test_degeneracy_nested_peel_equals_full_peel(spark):
     """degeneracy_core's nested-core probes must produce the same rows
     as probing every k from the FULL edge set (the pre-optimization
     shape)."""
-    from impractical_impala_spark.operators.graph import (
-        _peel, degeneracy_core)
+    from impractical_impala_spark.operators.graph import degeneracy_core
 
     e = _toy_edges(spark)
     got = {r.level: (r.k, r.n_nodes, r.n_edges)
@@ -114,7 +114,7 @@ def test_degeneracy_nested_peel_equals_full_peel(spark):
     sizes = {}
     k = 1
     while True:
-        n_nodes, n_edges = _peel(e0, k, 30)
+        n_nodes, n_edges = peel(e0, k, 30)
         if n_edges == 0:
             break
         sizes[k] = (n_nodes, n_edges)
@@ -126,14 +126,13 @@ def test_degeneracy_nested_peel_equals_full_peel(spark):
 
 
 def test_kcore_summary_chained_peels_equal_full_peels(spark):
-    from impractical_impala_spark.operators.graph import (
-        _peel, k_core_summary)
+    from impractical_impala_spark.operators.graph import k_core_summary
 
     e = _toy_edges(spark)
     got = {r.k: (r.n_nodes, r.n_edges)
            for r in k_core_summary(e, ks=(4, 2, 3)).collect()}
     e0 = e.select("a", "b").distinct().cache()
-    want = {k: _peel(e0, k, 30) for k in (2, 3, 4)}
+    want = {k: peel(e0, k, 30) for k in (2, 3, 4)}
     e0.unpersist()
     assert got == want
 

@@ -4,14 +4,16 @@ The r16 optimization round rewrote k-core internals around ONE h-index
 coreness fixpoint (operators/graph.py::coreness — Lü et al. 2016)
 replacing r15's chained / binary-searched peel loops. These tests pin
 value-equality of the new implementation against the Python reference
-peel and the retained ``_peel`` Spark reference on adversarial shapes
-(random graphs over two seeds, forests, empty graphs), so the oracle's
-sampled coverage is not the only sensor.
+peel and the Spark reference peel (``tests/graph_refs.py``) on
+adversarial shapes (random graphs over two seeds, forests, empty
+graphs), so the oracle's sampled coverage is not the only sensor.
 """
 
 import random
 
 import pytest
+
+from .graph_refs import peel
 
 
 def _py_coreness(edges):
@@ -57,9 +59,8 @@ def test_coreness_equals_python_peel(spark, seed):
 @pytest.mark.parametrize("seed", [7, 1234])
 def test_degeneracy_core_equals_peel_reference(spark, seed):
     """The coreness-based degeneracy/2-core rows must equal full-set
-    ``_peel`` probes at every k (the pre-r15 shape)."""
-    from impractical_impala_spark.operators.graph import (
-        _peel, degeneracy_core)
+    ``peel`` probes at every k (the pre-r15 shape)."""
+    from impractical_impala_spark.operators.graph import degeneracy_core
 
     edges = _rand_edges(seed, n_nodes=40, n_edges=120)
     e = spark.createDataFrame(edges, ["a", "b"])
@@ -68,7 +69,7 @@ def test_degeneracy_core_equals_peel_reference(spark, seed):
     e0 = e.select("a", "b").distinct().cache()
     sizes, k = {}, 1
     while True:
-        n_nodes, n_edges = _peel(e0, k, 60)
+        n_nodes, n_edges = peel(e0, k, 60)
         if n_edges == 0:
             break
         sizes[k] = (n_nodes, n_edges)
@@ -80,8 +81,7 @@ def test_degeneracy_core_equals_peel_reference(spark, seed):
 
 
 def test_kcore_summary_equals_peel_reference(spark):
-    from impractical_impala_spark.operators.graph import (
-        _peel, k_core_summary)
+    from impractical_impala_spark.operators.graph import k_core_summary
 
     edges = _rand_edges(99, n_nodes=40, n_edges=120)
     e = spark.createDataFrame(edges, ["a", "b"])
@@ -89,7 +89,7 @@ def test_kcore_summary_equals_peel_reference(spark):
     got = {r.k: (r.n_nodes, r.n_edges)
            for r in k_core_summary(e, ks=ks).collect()}
     e0 = e.select("a", "b").distinct().cache()
-    want = {k: _peel(e0, k, 60) for k in ks}
+    want = {k: peel(e0, k, 60) for k in ks}
     e0.unpersist()
     assert got == want
 

@@ -1,9 +1,13 @@
 """Source-layer unit semantics: epoch→NTZ conversion across the full
-signed range (pre-1970 epochs floor correctly) and its TZ independence."""
+signed range (pre-1970 epochs floor correctly) and its TZ independence,
+and the per-session parquet schema memo."""
 
 from pyspark.sql import functions as F
 
-from impractical_impala_spark.sources.readers import ntz_from_epoch_us
+from impractical_impala_spark.sources.readers import (
+    load_table, ntz_from_epoch_us)
+
+from .conftest import spark_jobs
 
 
 def _convert(spark, epochs_us):
@@ -43,3 +47,31 @@ def test_ntz_is_timezone_independent(spark):
         assert _convert(spark, us) == base
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)
+
+
+def test_schema_memo_skips_inference_and_reinfers_a_rewritten_file(
+        spark, tmp_path):
+    """load_table infers a file's schema once per session and file
+    version: a repeat load runs no Spark job, and a file rewritten at
+    the same path is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+
+    def jobs_and_columns():
+        out = []
+        n = spark_jobs(spark, lambda: out.append(
+            load_table(spark, str(tmp_path), "region").columns))
+        return n, out[0]
+
+    n_first, cols = jobs_and_columns()
+    assert n_first > 0 and cols == ["r_regionkey"]
+    assert jobs_and_columns() == (0, ["r_regionkey"])
+
+    pq.write_table(pa.table({"r_name": ["AFRICA"], "r_comment": ["x"]}),
+                   path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_name", "r_comment"]
+    assert [tuple(r) for r in df.collect()] == [("AFRICA", "x")]
