@@ -26,6 +26,20 @@ def _extended_schema(df: DataFrame, new_cols: Sequence[str]) -> T.StructType:
     return schema
 
 
+def grouped_pandas(df: DataFrame, keys: Sequence[str], fn: Callable,
+                   schema: T.StructType | str) -> DataFrame:
+    """``df.groupBy(*keys).applyInPandas(fn, schema)``, one task per core.
+
+    The repartition is explicit because AQE's 1 MB coalescing floor would
+    pack these small, CPU-bound inputs onto one Python worker (sf0.1 at
+    local[4], 4-vCPU VM: o22_hp_detrend_centi 2.5 s with it, 5.4 s
+    without); a user repartition is exempt from coalescing and satisfies
+    applyInPandas. No more tasks than cores: each Python task pays a
+    fixed 0.1-0.25 s (see session.py)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *keys).groupBy(*keys).applyInPandas(fn, schema)
+
+
 def add_grouped_cycles(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -46,13 +60,7 @@ def add_grouped_cycles(
             pdf[out_col] = kernel(pdf[in_col].to_numpy(dtype=np.float64))
         return pdf
 
-    # Explicit repartition by the group key: AQE coalesces small shuffles
-    # to ONE partition by byte size, which serializes the CPU-bound Python
-    # kernels into a single worker. A user-specified repartition is exempt
-    # from coalescing and its partitioning satisfies applyInPandas's
-    # requirement, so no second exchange is added.
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *group_cols).groupBy(*group_cols).applyInPandas(fn, schema)
+    return grouped_pandas(df, group_cols, fn, schema)
 
 
 def add_hp_cycles(df: DataFrame, group_cols: Sequence[str], order_col: str,
@@ -83,7 +91,4 @@ def add_quad_cycles(df: DataFrame, group_cols: Sequence[str], order_col: str,
             )
         return pdf
 
-    # same explicit repartition as add_grouped_cycles: keep the kernels
-    # parallel instead of letting AQE coalesce them onto one worker
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *group_cols).groupBy(*group_cols).applyInPandas(fn, schema)
+    return grouped_pandas(df, group_cols, fn, schema)

@@ -86,10 +86,10 @@ def _spark_docsets(spark: SparkSession, sf_dir: str, mutated: bool) -> DataFrame
     bigram-shingle hash set column ``dh``.
 
     The corpus parquet is a single small file (1-2 scan splits), which
-    would serialize the CPU-heavy shingle/md5 expression work onto 2
-    cores — repartition first so hashing uses the whole machine (at
-    lake scale the scan has enough natural splits and this is a no-op
-    knob)."""
+    would serialize the CPU-heavy shingle/md5 expression work onto 1-2
+    tasks — repartition first to one task per core so hashing uses the
+    whole machine (at lake scale the scan has enough natural splits and
+    this is a no-op knob)."""
     n = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text") \
         .repartition(n)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.detrend import add_grouped_cycles
+from ..operators.detrend import add_grouped_cycles, grouped_pandas
 from ..functions.detrend import hp_cycle
 from ..registry import register
 from ..sources import load_table
@@ -97,10 +97,7 @@ def o22_hp_detrend_centi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = ("user_id long, n long, cyc_sum_centi long, "
               "cyc_ssq_centi long, cyc_varnum long")
-    npar = spark.sparkContext.defaultParallelism
-    return (ev.repartition(npar, "user_id")
-            .groupBy("user_id").applyInPandas(kernel, schema)
-            .orderBy("user_id"))
+    return grouped_pandas(ev, ["user_id"], kernel, schema).orderBy("user_id")
 
 
 _S = 10 ** 6  # fixed-point scale (functions/detrend.py::HP_FX_SCALE)
@@ -235,10 +232,7 @@ def o23_quad_detrend_sd(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   min_t=MIN_T_EVENTS)
         return pdf
 
-    # explicit repartition: keep the CPU-bound kernels parallel (AQE
-    # would coalesce this small shuffle to one python worker)
-    n = spark.sparkContext.defaultParallelism
-    out = df.repartition(n, "user_id").groupBy("user_id").applyInPandas(kernel, schema)
+    out = grouped_pandas(df, ["user_id"], kernel, schema)
     return (
         out.groupBy("user_id")
         .agg(

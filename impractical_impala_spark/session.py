@@ -9,6 +9,10 @@ Defaults are chosen for the driver's environment (single-JVM ``local[N]``,
 - ``spark.sql.shuffle.partitions`` sized to the core count locally; on a
   1000-executor cluster you would set it to 2-3x total cores and let AQE
   coalesce, which is exactly what these settings do in miniature.
+- ``spark.default.parallelism`` left to the scheduler: the cores of
+  ``local[N]``, or the total executor cores on a cluster. Stages sized by
+  it (the ``applyInPandas`` kernels, explicit ``repartition(n)``) run one
+  task per core, in one wave.
 - Arrow enabled: every Python-side kernel in this engine is an
   Arrow-batched pandas UDF / applyInPandas — never row-at-a-time Python.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
@@ -59,8 +63,17 @@ def tuned_conf(cores: int) -> dict[str, str]:
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # --- shuffle sizing ----------------------------------------------
+        # AQE coalesces shuffle partitions, so their floor of 8 is cheap.
         "spark.sql.shuffle.partitions": str(max(cores, 8)),
-        "spark.default.parallelism": str(max(cores, 8)),
+        # No spark.default.parallelism: the scheduler's own value is its
+        # core count. A floor above the cores only splits stages into more
+        # waves, and each Python task has a fixed cost of 0.1-0.25 s, most
+        # of it PySpark's per-task importlib.invalidate_caches(), which makes
+        # every zipimporter re-read pyspark.zip (1,328 entries). A floor of
+        # 8 runs 8 Python tasks at local[2]: in perfbench graph_panel_lake
+        # (sf0.001, 4-vCPU VM) o22_hp_detrend_centi's kernel takes ~14 ms
+        # in plain pandas, yet its plan ran 1.48 s with 8 tasks (Python
+        # workers busy 2,099 ms) against 0.93 s (837 ms) with 2.
         # 128 MiB input splits: good balance of task count vs overhead for
         # parquet scans both at sf0.1 and on a real cluster.
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),

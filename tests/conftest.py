@@ -21,9 +21,9 @@ def spark():
     spark.stop()
 
 
-def spark_jobs(spark, fn) -> int:
-    """Spark jobs started by ``fn()``, counted under a job group of
-    their own."""
+def _group_job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs started by ``fn()``, run under a job group
+    of their own."""
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -31,7 +31,21 @@ def spark_jobs(spark, fn) -> int:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()``."""
+    return len(_group_job_ids(spark, fn))
+
+
+def spark_stage_tasks(spark, fn) -> list[int]:
+    """Task counts of the stages run by ``fn()``, in stage-id order."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in _group_job_ids(spark, fn)
+              for s in tracker.getJobInfo(j).stageIds}
+    infos = (tracker.getStageInfo(s) for s in sorted(stages))
+    return [i.numTasks for i in infos if i is not None]
 
 
 @pytest.fixture(scope="session")
@@ -68,6 +82,7 @@ _GATE_FILES = {
     "test_graph.py",              # graph operator unit pins
     "test_r15_opt.py",            # r15 optimization equivalence pins
     "test_r16_opt.py",            # r16 optimization equivalence pins
+    "test_session.py",            # session parallelism pins
 }
 
 
