@@ -1,5 +1,7 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the engine's headline queries at
+"""Benchmark harness: times every registered query, in registration
+order, then the bench-only kernels (``headline()``; the registry is the
+only list of queries, so registering a query needs no edit here) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 
@@ -28,534 +30,6 @@ import re
 import sys
 import time
 
-
-HEADLINE = [
-    # core OLAP
-    "q1_pricing_summary",
-    "q3_top_unshipped_orders",
-    "q5_revenue_by_nation",
-    "q6_revenue_delta",
-    "q_rollup_revenue",
-    "q_exists_priority",
-    "q13_order_count_distribution",
-    "q_correlated_max",
-    # windows / sessionization
-    "o10_run_id",
-    "o12_run_filter",
-    "w1_running_sum",
-    "w3_top1_per_group",
-    # reshape
-    "o16_pivot",
-    "o03_unpivot",
-    # kernels
-    "o23_quad_detrend_sd",
-    "o22_hp_detrend_sd",
-    # training-data surface
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "text_fingerprint",
-    "text_quality_score",
-    # added round 2 (append-only so r1-vs-r2 per-query deltas stay
-    # meaningful for the original 24)
-    "q_asof_attribution",
-    "events_sessionized",
-    "ann_ivf_probe",
-    # added round 3 (append-only): the round-2 verdict's bench asks
-    # (q9/q21/clusters/survivors) + the new end-to-end pipelines
-    "q9_product_profit",
-    "q21_latest_shipper",
-    "dedup_clusters",
-    "dedup_survivors",
-    "ann_dedup_pipeline",
-    "text_ngram_contamination",
-    # added round-3 session (append-only): curation surface
-    "pack_sequences",
-    "dedup_incremental",
-    "emb_pq_codes",
-    "dedup_embedding_lsh",
-    "q_global_rank",
-    "multimodal_frame_sample",
-    "events_cohort_retention",
-    "events_gapfill_locf",
-    # added round 4 (append-only): lakehouse + distributed-ML waves
-    "bucketed_join_segments",
-    "scd2_user_state",
-    "cdc_latest_state",
-    "emb_covariance",
-    "user_pagerank",
-    "events_markov_transitions",
-    "corpus_training_manifest",
-    "events_rolling_active_users",
-    "events_time_rollup",
-    "text_inverted_index",
-    "merge_upsert_orders",
-    "pit_state_join",
-    # added round 5 (append-only): diagnostics + new dedup/ML shapes
-    "graph_triangles",
-    "dedup_containment",
-    "fuzzy_part_match",
-    "emb_intra_label_cohesion",
-    "price_histogram",
-    "skew_key_profile",
-    "customer_pareto",
-    "nation_revenue_yoy",
-    # late round 5 (append-only): audit/association/QA wave
-    "dedup_lsh_audit",
-    "q_filtered_aggs",
-    "basket_brand_lift",
-    "orders_rfm_segments",
-    "events_diversity_profile",
-    "text_zipf_fit",
-    "q_relational_division",
-    "text_bigram_surprisal",
-    # late round 5 (append-only): drift-detection / statistical QA wave
-    "events_value_ks_drift",
-    "orders_backlog_profile",
-    "supplier_gini_by_nation",
-    "events_ewma_hourly",
-    "events_chi2_daypart",
-    "dq_column_profile",
-    "audience_overlap_matrix",
-    "user_churn_hazard",
-    "dpp_partition_prune",
-    "lineitem_weighted_median",
-    "multimodal_phash_neardup",
-    "lineitem_mad_outliers",
-    # added round 6 (append-only): overlap wide twin + corpus-QA wave
-    "audience_overlap_wide",
-    "source_token_entropy",
-    "doc_length_drift_psi",
-    "orders_seasonal_index",
-    "events_interarrival_profile",
-    # round 6 wave 2 (append-only): eval-harness + feature-store ops
-    "langid_confusion_matrix",
-    "vocab_oov_coverage",
-    "events_fano_burstiness",
-    "events_hourly_autocorr24",
-    "supplier_hhi_by_nation",
-    "user_feature_matrix",
-    "dedup_rate_by_source",
-    "minhash_calibration",
-    # round 6 wave 3 (append-only): statistical-rigor ops
-    "events_cusum_changepoint",
-    "events_mw_rank_drift",
-    "benford_digit_profile",
-    "orders_bootstrap_ci",
-    "text_ngram_novelty",
-    # round 6 wave 4 (append-only): ranking/robust-rank/ANN audit
-    "ann_recall_audit",
-    "part_return_rate_wilson",
-    "nation_theilsen_trend",
-    "lineitem_spearman_corr",
-    # round 6 wave 5 (append-only): privacy audit + fixed-point PCA
-    "privacy_kanon_audit",
-    "emb_pca_power",
-    # round 7 (append-only): statistical tests + corpus audits +
-    # streaming drift batch twin
-    "events_drift_monitor",
-    "events_welch_ttest",
-    "events_jsd_drift",
-    "events_kruskal_wallis",
-    "events_mann_kendall",
-    "lineitem_kendall_tau",
-    "users_kaplan_meier",
-    "dq_uniqueness_audit",
-    "split_leakage_audit",
-    "source_content_overlap",
-    "order_ship_lag_quantiles",
-    "events_weekday_decompose",
-    "graph_degree_assortativity",
-    "session_hour_allocation",
-    # round 7 wave 2 (append-only): sampling / collocations / OLS
-    "text_pmi_collocations",
-    "events_share_ztest",
-    "dq_sequence_gaps",
-    "weighted_reservoir_sample",
-    "lineitem_lmoments",
-    "lineitem_price_ols",
-    "ann_ivf_nprobe_sweep",
-    "events_holt_winters",
-    "events_cusum_binseg",
-    # added round 8 (append-only): O22 hash-evidence twin, deflated
-    # top-k PCA, and the histogram-decile pareto rewrite
-    "o22_hp_detrend_centi",
-    "emb_pca_topk",
-    # round 8 wave 2 (append-only): spectral/effect-size/MI monitoring,
-    # IR + tokenizer-training text ops, embedding evaluation
-    "events_periodogram",
-    "events_cvm_drift",
-    "events_effect_sizes",
-    "events_mutual_information",
-    "fold_balance_audit",
-    "text_bm25_topk",
-    "bpe_merge_candidates",
-    "unigram_crossentropy_split",
-    "heaps_law_fit",
-    "emb_centroid_outliers",
-    "emb_knn_label_purity",
-    "emb_pca_project",
-    # round-8 wave 4: linkage / split hygiene / diagnostics
-    "dedup_sorted_neighborhood",
-    "split_time_embargo",
-    "events_pacf",
-    "lineitem_corr_matrix",
-    "text_readability",
-    "graph_adamic_adar",
-    "nation_theil_index",
-    # round-8 wave 5: calibration & harmonization
-    "events_roc_auc",
-    "events_isotonic_calibration",
-    "privacy_ldiversity_audit",
-    "covariate_shift_weights",
-    "source_quantile_normalize",
-    # round-8 wave 6: scoring diagnostics / sequences / tail risk
-    "events_woe_iv",
-    "events_cumulative_gain",
-    "session_pattern_mining",
-    "events_type_ccf",
-    "events_gumbel_maxima",
-    "snm_recall_audit",
-    # round-8 wave 7: sequential drift / clustering quality
-    "events_page_hinkley",
-    "emb_silhouette",
-    "events_entropy_rate",
-    "events_burst_viterbi",
-    # round-8 wave 8: corpus richness / agreement / conformal / tail
-    "vocab_chao1_richness",
-    "langid_kappa_f1",
-    "events_conformal_calibration",
-    "events_hill_tail",
-    "events_brier_decomposition",
-    "tfidf_doc_neardup",
-    # round-8 wave 9: operating points / fairness
-    "events_pr_auc",
-    "events_calibration_error",
-    "events_threshold_selection",
-    "fairness_accuracy_parity",
-    # round-8 wave 10: experiment/eval extras (completing the late-r8
-    # cohort so every r9 window candidate has a per-query prior)
-    "text_rbo_agreement",
-    "langid_mcnemar",
-    "events_mde_power",
-    "emb_cka_alignment",
-    "source_neyman_allocation",
-    # r9: k-core got its hash oracle this round
-    "graph_kcore_summary",
-    # r9 re-proof fill cohort (stale-r3 era) — benched so the window's
-    # re-proof members carry priors too
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q11_important_stock",
-    "q12_ship_delay",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_count",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q20_small_part_suppliers",
-    "q22_dormant_customers",
-    "q_grouping_sets",
-    "w6_distribution_ranks",
-    "text_length_histogram",
-    "text_redact_pii",
-    "text_repetition_ratio",
-    "quality_gate_survivors",
-    "split_cluster_safe",
-    "sink_roundtrip_partitioned",
-    # round-9 wave 11: retrieval & curation completion
-    "emb_mmr_diversify",
-    "bloom_filter_audit",
-    "dedup_edit_distance_confirm",
-    "retrieval_rrf_fusion",
-    "text_charclass_profile",
-    "attribution_position_based",
-    # round-9 wave 12: engine statistics, data skipping & governance
-    "zonemap_skipping_audit",
-    "ndv_estimator_audit",
-    "stats_histogram_equidepth",
-    "join_cardinality_audit",
-    "privacy_tcloseness_audit",
-    "retrieval_ndcg",
-    # round-9 wave 13: operational quality
-    "fairness_equalized_odds",
-    "orders_cohort_ltv",
-    "dq_freshness_sla",
-    # round-9 wave 14: sketch exactness, interval joins & survival
-    "ndv_kmv_sketch",
-    "stats_histogram_sampled",
-    "retrieval_mrr_hitk",
-    "ann_pq_adc_topk",
-    "events_interval_overlap",
-    "users_nelson_aalen",
-    # round-9 wave 15: curation filters & symbolic series
-    "doc_perplexity_filter",
-    "text_keyword_rake",
-    "doc_gopher_quality_flags",
-    "events_sax_symbolic",
-    "lineitem_pchart_returns",
-    # round-9 wave 16: forecast eval, graph reach, DP, DSIR, IVF-PQ
-    "orders_forecast_backtest",
-    "graph_bfs_hops",
-    "privacy_dp_count_release",
-    "doc_dsir_importance",
-    "ann_ivf_pq_pipeline",
-    # round-9 wave 17: quantized retrieval audits & sequential tests
-    "ann_ivf_pq_trained",
-    "emb_matryoshka_audit",
-    "emb_binary_sign_audit",
-    "events_sprt_sequential",
-    # round-9 wave 18: tokenizer economics, gates, engine advice
-    "tokenizer_fertility_audit",
-    "events_tost_equivalence",
-    "engine_tuning_advisor",
-    "multimodal_chunk_dedup",
-    # round-9 wave 19: data-mix allocation & Kneser-Ney LM
-    "corpus_mix_allocation",
-    "text_bigram_kneser_ney",
-    # round-9 wave 20: Shapley attribution & Bass diffusion
-    "attribution_shapley",
-    "users_bass_diffusion",
-    # round-9 wave 21: stylometry & causal inference
-    "text_burrows_delta",
-    "orders_diff_in_diff",
-    # round-9 wave 22: causality, queueing, multimodal runs
-    "events_granger_causality",
-    "orders_littles_law",
-    "multimodal_vad_segments",
-    # round-9 wave 23: hypothesis-testing completion
-    "events_anova_f",
-    "events_perm_bh_fdr",
-    "events_ljung_box",
-    "lineitem_bartlett_test",
-    # round-9 wave 24: graph completion
-    "graph_bfs_multisource",
-    "graph_jaccard_linkpred",
-    "graph_clustering_coeff",
-    # round-9 wave 25: calibration decision layer
-    "events_spiegelhalter_z",
-    "events_calibration_slope",
-    "events_lift_at_k",
-    # round-9 wave 26: lexical diversity & embedding geometry
-    "text_mattr",
-    "text_simpson_diversity",
-    "emb_participation_ratio",
-    "emb_hubness_audit",
-    # round-9 wave 27: codec advice, stylometry, queueing what-if
-    "compression_entropy_advisor",
-    "source_bigram_kl",
-    "orders_kingman_wait",
-    # round-9 wave 28: change-point & randomness gates, revenue structure
-    "events_pettitt_test",
-    "events_runs_test",
-    "part_abc_classes",
-    "supplier_balassa_rca",
-    # round-9 wave 29: curation decision curves
-    "dedup_threshold_sweep",
-    "vocab_coverage_at_k",
-    "doc_length_lognormal_fit",
-    # round-9 wave 30: system dynamics
-    "events_markov_stationary",
-    "events_transfer_entropy",
-    "graph_modularity_by_type",
-    # round-9 wave 31: long-memory, stocking targets, hub structure
-    "events_hurst_exponent",
-    "orders_newsvendor_quantile",
-    "graph_rich_club",
-    # round-9 wave 32: discriminability, lifecycle, autocorrelation cost
-    "emb_fisher_ratio_dims",
-    "customer_tier_migration",
-    "events_effective_sample_size",
-    # round-9 wave 33: boilerplate, tail thresholds, concentration
-    "doc_boilerplate_ratio",
-    "events_mean_excess",
-    "user_activity_gini",
-    # round-9 wave 34: seasonality significance, market structure, rate
-    "events_dow_anova",
-    "supplier_cr4_by_type",
-    "source_char_entropy_rate",
-    # round-9 wave 35: circular stats, regime breaks, corpus growth
-    "events_rayleigh_diurnal",
-    "orders_chow_break",
-    "text_hapax_ratio",
-    # round-9 wave 36: arrival-process fit, audience mix, price spread
-    "events_weibull_interarrival",
-    "events_new_returning_mix",
-    "part_price_dispersion",
-    # round-9 wave 37: source redundancy, layout encoding, separability
-    "source_jsd_matrix",
-    "engine_rle_advisor",
-    "dedup_hamming_spectrum",
-    # round-9 wave 38: rate-model adequacy, retention decay, degree tail
-    "events_poisson_gof",
-    "events_retention_half_life",
-    "graph_degree_powerlaw",
-    # round-9 wave 39: skyline operator, planning matrix, JL audit
-    "q_skyline_2d",
-    "part_abc_xyz_matrix",
-    "emb_random_projection_audit",
-    # round-9 wave 40: engagement stickiness
-    "users_stickiness_l7",
-    # round-9 wave 41: funnel entry quality, embedding refresh drift
-    "events_bounce_rate",
-    "emb_centroid_drift",
-    # round-9 wave 42: clustered-sampling cost, dimension redundancy
-    "events_day_icc",
-    "part_brand_type_cramers_v",
-    # round-9 wave 43: shared rhythms, capacity headroom
-    "events_hourly_profile_jsd",
-    "events_peak_load_ratio",
-    # round-9 wave 44: near-dup provenance
-    "dedup_cross_source_matrix",
-    # round 11 (append-only): the remaining 78 registered queries that
-    # never carried a bench prior — early o-family/TPC-H/window/text/
-    # streaming-twin/lakehouse names. Once the never-checked evidence
-    # queue empties (~r12), stalest-green re-proofs of exactly these
-    # names start entering driver windows, and the standing discipline
-    # (every window candidate carries a per-query prior) would break
-    # without them. All sub-second at sf0.1; HEADLINE now spans the
-    # whole registry plus the bench-only HP float kernel.
-    "o01_scan_projection",
-    "o02_recode_case",
-    "o04_cast",
-    "o06_union_all",
-    "o07_in_filter",
-    "o08_sort_topk",
-    "o09_validity_flag",
-    "o11_run_length",
-    "o13_distinct",
-    "o14_having",
-    "o15_semi_join",
-    "o17_arithmetic",
-    "o18_lookup_join",
-    "o19_guarded_log",
-    "o20_dlog",
-    "o21_time_index",
-    "o24_grouped_sd",
-    "o25_ratio",
-    "o26_corr",
-    "o27_acf",
-    "o28_two_level_agg",
-    "o29_max_by_group",
-    "q18_large_volume_customers",
-    "w2_rank_orders",
-    "w4_moving_avg",
-    "q_anti_join",
-    "events_hourly_counts",
-    "events_session_window",
-    "text_token_count",
-    "text_langid",
-    "text_tfidf_top_terms",
-    "dedup_embedding_neardup",
-    "ann_ivf_trained",
-    "emb_quantize_int8",
-    "emb_label_centroid",
-    "q_range_band_join",
-    "json_extract_props",
-    "string_functions",
-    "q_percentiles",
-    "q_set_ops",
-    "q_cube_revenue",
-    "w5_value_windows",
-    "q_date_functions",
-    "q_salted_agg",
-    "q_stratified_sample",
-    "q_profile_table",
-    "multimodal_blob_stats",
-    "multimodal_resized_checksum",
-    "multimodal_audio_energy",
-    "q10_returned_items",
-    "events_stream_join",
-    "events_dedup_counts",
-    "events_sliding_avg",
-    "events_anomaly_zscore",
-    "doc_chunk_tokens",
-    "mix_weighted_sample",
-    "text_heavy_hitters",
-    "events_cumulative_users",
-    "events_funnel",
-    "events_time_weighted_avg",
-    "events_funnel_bounded",
-    "snapshot_diff",
-    "text_winsorized_stats",
-    "curriculum_buckets",
-    "ivm_merge_counts",
-    "q_collect_sorted",
-    "fk_integrity_audit",
-    "zorder_layout_scan",
-    "compact_small_files",
-    "schema_evolution_read",
-    "contrastive_negatives",
-    "session_paths",
-    "events_rolling_slope",
-    "json_variant_extract",
-    "q_lateral_topn",
-    "q_recursive_streaks",
-    "udtf_char_chunks",
-    "aqp_block_sample",
-    # round 13 (append-only): the registry unfroze once the evidence
-    # queue drained (VERDICT r12 ask #4) — multi-probe LSH and the
-    # grouped Holt-Winters enter with their debut priors.
-    "ann_lsh_multiprobe",
-    "orders_holt_winters_nation",
-    # round 13, second growth wave (append-only): the calendar-month
-    # grain, the value-weighted EWMA, the trained-quantizer probe
-    # sweep, and the HW forecast bands enter with their debut priors.
-    "events_monthly_rollup",
-    "events_value_ewma_hourly",
-    "ann_ivf_trained_sweep",
-    "orders_hw_band_nation",
-    # round 13, third growth wave (append-only): the per-nation HW
-    # backtest and the minhash banding tuning curve.
-    "orders_hw_backtest_nation",
-    "dedup_banding_sweep",
-    # round 13, fourth growth wave (append-only): the quality-gate
-    # ablation and the LSH table-count sweep.
-    "quality_gate_ablation",
-    "ann_lsh_tables_sweep",
-    # round 14 (append-only): the five value-weighted daily monitors
-    # over the shared hourly state's micro value sums, the IVF-PQ
-    # probe sweep (ADC regret vs nprobe over the trained quantizer),
-    # the calendar-quarter grain, and the per-source gate ablation.
-    "events_te_value",
-    "events_granger_value",
-    "events_dow_anova_value",
-    "events_hurst_value",
-    "events_pettitt_value",
-    "ann_ivf_pq_sweep",
-    "events_quarterly_rollup",
-    "quality_gate_ablation_by_source",
-    "dedup_shingle_sweep",
-    "events_sprt_value",
-    # round 15 (append-only): the LSH tables x probe-radius grid, the
-    # PQ subspace-count (compression) sweep, the 4-5-4 retail fiscal
-    # quarter grain (27th streaming finalizer), and the per-source
-    # shingle-sweep split.
-    "ann_lsh_grid",
-    "ann_pq_m_sweep",
-    "events_retail454_rollup",
-    "events_retail454_months",
-    "dedup_shingle_by_source",
-    "events_retail_calendar_months",
-    "dedup_banding_by_source",
-    # r15 third wave: residual-encoded IVF-PQ (the FAISS composition)
-    # and the plain-vs-residual reconstruction comparison.
-    "ann_ivf_residual_pq",
-    "ann_pq_residual_gain",
-    "ann_lsh_bits_sweep",
-    # r15 fourth wave: training-pipeline audits — per-(lang, shard)
-    # packing efficiency and the mixture-temperature recipe sweep.
-    "doc_pack_efficiency",
-    "source_mixture_temperature",
-    # r15 fifth wave: the value-weighted Ljung-Box daily monitor
-    # (30-finalizer fleet).
-    "events_ljung_box_value",
-]
 
 # Queries whose recorded number was flagged as possible variance in a
 # verdict: measure as BEST OF 3 so the recorded value reflects the
@@ -588,6 +62,17 @@ def _bench_only() -> dict:
     from impractical_impala_spark.queries.stats_ops import o22_hp_detrend_sd
 
     return {"o22_hp_detrend_sd": o22_hp_detrend_sd}
+
+
+def headline() -> list[str]:
+    """The bench order: every registered query in registration order,
+    then the bench-only kernels. Registration order is stable from round
+    to round; ``all_queries()`` order is not, because the correctness
+    window is moved to its front."""
+    from impractical_impala_spark.registry import all_queries, registered_names
+
+    all_queries()  # loads the query package, which registers every query
+    return registered_names() + list(_bench_only())
 
 
 def detail_path_of() -> str:
@@ -751,7 +236,7 @@ def main() -> None:
     extra_timings: dict[str, float] = {}
     remeasured: list[str] = []
     total = 0.0
-    for name in HEADLINE:
+    for name in headline():
         build = queries[name].build if name in queries else bench_only[name]
 
         def measure_once() -> float:

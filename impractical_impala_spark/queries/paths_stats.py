@@ -429,26 +429,23 @@ register("graph_kcore_summary", graph_kcore_summary, _KCORE_ORACLE,
 BFS_ROUNDS = 4
 
 
-def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded BFS over the co-activity backbone: hop distances from
-    the minimum-id seed node, unrolled BFS_ROUNDS frontier expansions
-    (the fixed-iteration discipline that gave o22/ann_ivf_trained
-    their hash oracles — the unroll IS the operator, mirrored CTE for
-    CTE in the oracle). Output: nodes per hop 0..BFS_ROUNDS plus the
-    still-unreached count (hop = -1). Each round is one join of the
-    current frontier against the symmetrized edge list keyed on the
-    node id — the standard distributed BFS shape; rounds are a
-    documented cap, not a convergence loop."""
-    edges = cohort_edges(load_table(spark, sf_dir, "events"))
-    # each unrolled round joins against sym — cache it once or the
-    # support-ranked backbone is recomputed BFS_ROUNDS times
-    sym = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(edges.select(F.col("b").alias("u"),
-                                     F.col("a").alias("v")))).cache()
-    nodes = sym.select("u").distinct()
-    seed = nodes.agg(F.min("u").alias("su"))
-    dist = (nodes.crossJoin(F.broadcast(seed))
-            .select("u", F.expr("case when u = su then 0 end").alias("d")))
+def _symmetrized(edges: DataFrame) -> DataFrame:
+    """Both directions of every backbone edge as ``(u, v)``, cached:
+    each caller joins it more than once (every unrolled BFS round), and
+    uncached the support-ranked backbone is recomputed per join."""
+    return (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
+            .unionByName(edges.select(F.col("b").alias("u"),
+                                      F.col("a").alias("v")))).cache()
+
+
+def _bfs_hop_histogram(sym: DataFrame, dist: DataFrame) -> DataFrame:
+    """Unrolled BFS from ``dist`` (``u``, ``d``: 0 at the seeds, NULL
+    elsewhere) over ``sym``: BFS_ROUNDS frontier expansions, each one
+    join of the current frontier against the symmetrized edge list
+    keyed on the node id. Returns nodes per hop 0..BFS_ROUNDS plus the
+    still-unreached count (hop = -1). The rounds are a documented cap,
+    not a convergence loop; the oracle mirrors them CTE for CTE
+    (``_bfs_rounds_sql``)."""
     for k in range(1, BFS_ROUNDS + 1):
         # each round reads dist twice (base + frontier) — truncate the
         # lineage per round or the plan re-evaluates the whole prefix
@@ -465,7 +462,10 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("hop"))
 
 
-def _bfs_oracle() -> str:
+def _bfs_rounds_sql(sources: str) -> str:
+    """Oracle twin of ``_bfs_hop_histogram``: the backbone edges, their
+    symmetrization ``sym``, then ``sources`` (CTEs ending in ``d0(u,
+    d)``), the BFS_ROUNDS frontier CTEs and the hop histogram."""
     prev = "d0"
     rounds = []
     for k in range(1, BFS_ROUNDS + 1):
@@ -486,12 +486,7 @@ sym AS (
     SELECT a AS u, b AS v FROM edges
     UNION ALL
     SELECT b AS u, a AS v FROM edges
-), nodes AS (SELECT DISTINCT u FROM sym),
-s AS (SELECT MIN(u) AS su FROM nodes),
-d0 AS (
-    SELECT u, CASE WHEN u = su THEN 0 END AS d
-    FROM nodes CROSS JOIN s
-),
+), {sources},
 {chain},
 final AS (
     SELECT u, MIN(d) AS d FROM {prev} GROUP BY u
@@ -502,7 +497,31 @@ FROM final GROUP BY 1 ORDER BY hop
 """
 
 
-register("graph_bfs_hops", graph_bfs_hops, _bfs_oracle(),
+def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded BFS over the co-activity backbone: hop distances from
+    the minimum-id seed node, unrolled BFS_ROUNDS frontier expansions
+    (the fixed-iteration discipline that gave o22/ann_ivf_trained
+    their hash oracles — the unroll IS the operator, mirrored CTE for
+    CTE in the oracle). Output: nodes per hop 0..BFS_ROUNDS plus the
+    still-unreached count (hop = -1) — the standard distributed BFS
+    shape (``_bfs_hop_histogram``)."""
+    sym = _symmetrized(cohort_edges(load_table(spark, sf_dir, "events")))
+    nodes = sym.select("u").distinct()
+    seed = nodes.agg(F.min("u").alias("su"))
+    dist = (nodes.crossJoin(F.broadcast(seed))
+            .select("u", F.expr("case when u = su then 0 end").alias("d")))
+    return _bfs_hop_histogram(sym, dist)
+
+
+_BFS_ORACLE = _bfs_rounds_sql("""nodes AS (SELECT DISTINCT u FROM sym),
+s AS (SELECT MIN(u) AS su FROM nodes),
+d0 AS (
+    SELECT u, CASE WHEN u = su THEN 0 END AS d
+    FROM nodes CROSS JOIN s
+)""")
+
+
+register("graph_bfs_hops", graph_bfs_hops, _BFS_ORACLE,
          "bounded-unroll BFS hop histogram over the co-activity backbone")
 
 
@@ -518,72 +537,30 @@ def graph_bfs_multisource(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability-audit shape a curation pipeline wants ("how much of
     the graph is within h hops of the hubs"), and the multi-source
     generalization the round-9 roadmap queued. Seed selection is a
-    distributed top-K (never a global-order window); each round is
-    one frontier join against the symmetrized edge list with
-    per-round localCheckpoint lineage truncation."""
-    edges = cohort_edges(load_table(spark, sf_dir, "events"))
-    sym = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(edges.select(F.col("b").alias("u"),
-                                     F.col("a").alias("v")))).cache()
+    distributed top-K (never a global-order window); the rounds are
+    ``_bfs_hop_histogram``'s."""
+    sym = _symmetrized(cohort_edges(load_table(spark, sf_dir, "events")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     seeds = (deg.orderBy(F.col("deg").desc(), "u").limit(MS_SEEDS)
              .select("u", F.lit(0).alias("d0")))
     dist = (deg.select("u").join(F.broadcast(seeds), "u", "left")
             .select("u", F.col("d0").alias("d")))
-    for k in range(1, BFS_ROUNDS + 1):
-        dist = dist.localCheckpoint()
-        frontier = dist.filter(F.col("d") == k - 1).select("u")
-        nxt = (sym.join(frontier, "u")
-               .select(F.col("v").alias("u")).distinct()
-               .withColumn("cand", F.lit(k)))
-        dist = (dist.join(nxt, "u", "left")
-                .select("u", F.coalesce("d", "cand").alias("d")))
-    return (dist.groupBy(F.coalesce("d", F.lit(-1)).alias("hop"))
-            .agg(F.count(F.lit(1)).alias("n_users"))
-            .orderBy("hop"))
+    return _bfs_hop_histogram(sym, dist)
 
 
-def _bfs_ms_oracle() -> str:
-    prev = "d0"
-    rounds = []
-    for k in range(1, BFS_ROUNDS + 1):
-        rounds.append(f"""f{k} AS (
-    SELECT DISTINCT s.v AS u FROM sym s
-    JOIN {prev} ON s.u = {prev}.u AND {prev}.d = {k - 1}
-), d{k} AS (
-    SELECT u, d FROM {prev}
-    UNION ALL
-    SELECT u, {k} AS d FROM f{k}
-    WHERE u NOT IN (SELECT u FROM {prev} WHERE d IS NOT NULL)
-)""")
-        prev = f"d{k}"
-    chain = ",\n".join(rounds)
-    return f"""
-WITH {_COHORT_EDGES_SQL},
-sym AS (
-    SELECT a AS u, b AS v FROM edges
-    UNION ALL
-    SELECT b AS u, a AS v FROM edges
-), deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
-seeds AS (
+_BFS_MS_ORACLE = _bfs_rounds_sql(
+    "deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),\n"
+    f"""seeds AS (
     SELECT u FROM deg ORDER BY deg DESC, u LIMIT {MS_SEEDS}
 ),
 d0 AS (
     SELECT deg.u, CASE WHEN deg.u IN (SELECT u FROM seeds)
                   THEN 0 END AS d
     FROM deg
-),
-{chain},
-final AS (
-    SELECT u, MIN(d) AS d FROM {prev} GROUP BY u
-)
-SELECT CAST(COALESCE(d, -1) AS INT) AS hop,
-       CAST(COUNT(*) AS BIGINT) AS n_users
-FROM final GROUP BY 1 ORDER BY hop
-"""
+)""")
 
 
-register("graph_bfs_multisource", graph_bfs_multisource, _bfs_ms_oracle(),
+register("graph_bfs_multisource", graph_bfs_multisource, _BFS_MS_ORACLE,
          f"multi-source BFS hop histogram from the top-{MS_SEEDS} hubs")
 
 
@@ -604,9 +581,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     score is exact integer ppm; existing backbone edges are
     anti-joined away; output caps at JC_TOPK by (ppm desc, x, y)."""
     edges = cohort_edges(load_table(spark, sf_dir, "events"))
-    sym = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(edges.select(F.col("b").alias("u"),
-                                     F.col("a").alias("v")))).cache()
+    sym = _symmetrized(edges)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     piv = deg.filter(F.col("deg") <= JC_PIVOT_CAP).select("u")
     adj = sym.join(piv, "u")

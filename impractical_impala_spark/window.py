@@ -26,16 +26,18 @@ the repo root), so even an idle round drains the evidence queue:
    registration order within a round) — re-proof pressure against
    fixture drift once the queue above is empty.
 
-Deleting every historical hand list in ``queries/__init__.py`` changes
-nothing about the computed window (the r10 verdict's done-criterion);
-the lists remain only as round-by-round documentation.
+The window is a function of the history, the registration order and
+``CHANGED_THIS_ROUND`` alone; the hand-kept lists of rounds 4-10 were
+deleted from ``queries/__init__.py`` (they are in git history).
 """
 
 from __future__ import annotations
 
 import json
 import re
+from collections.abc import Mapping
 from pathlib import Path
+from types import MappingProxyType
 
 WINDOW_SLOTS = 50
 
@@ -85,24 +87,19 @@ def driver_history(root: Path | None = None) -> dict[str, tuple[int, bool]]:
 
 
 def changed_lead(registered: list[str],
-                 changed: "dict[str, int] | list[str]",
+                 changed: Mapping[str, int],
                  hist: dict[str, tuple[int, bool]]) -> list[str]:
     """The still-ACTIVE changed names (window priority 1), in
     declaration order: registered, and not yet proven by a green driver
-    row from a round strictly newer than the change's as-of round. A
-    plain list means as-of = the newest round in ``hist`` (legacy
-    "always lead" semantics — nothing can postdate it)."""
+    row from a round strictly newer than the change's as-of round."""
     reg = set(registered)
-    newest = max((r for r, _ in hist.values()), default=0)
-    as_of = (dict(changed) if isinstance(changed, dict)
-             else {n: newest for n in changed})
-    return [n for n in as_of
+    return [n for n, as_of in changed.items()
             if n in reg and not (
-                n in hist and hist[n][1] and hist[n][0] > as_of[n])]
+                n in hist and hist[n][1] and hist[n][0] > as_of)]
 
 
 def computed_window(registered: list[str],
-                    changed: "dict[str, int] | list[str]" = (),
+                    changed: Mapping[str, int] = MappingProxyType({}),
                     slots: int = WINDOW_SLOTS,
                     root: Path | None = None,
                     history: dict[str, tuple[int, bool]] | None = None,
@@ -116,9 +113,7 @@ def computed_window(registered: list[str],
     itself raises on unknown WINDOW names later anyway). A changed name
     whose latest history row is GREEN and NEWER than its as-of round is
     already proven and falls through to ordinary green priority — the
-    hand list self-retires without a round-open edit. A plain list is
-    accepted for synthetic-history tests and means "always lead"
-    (as-of = newest round in the history, so nothing can postdate it).
+    hand list self-retires without a round-open edit.
 
     ``history`` lets callers inject a synthetic evidence dict (ADVICE
     r12: scripts/window_queue.py's next-window prediction must reuse

@@ -52,9 +52,7 @@ def queue_state(root: Path = REPO) -> dict:
         "never_checked": never,
         "never_checked_count": len(never),
         "latest_row_failed": failed,
-        "changed_this_round": (dict(CHANGED_THIS_ROUND)
-                               if isinstance(CHANGED_THIS_ROUND, dict)
-                               else list(CHANGED_THIS_ROUND)),
+        "changed_this_round": dict(CHANGED_THIS_ROUND),
         "changed_still_leading": changed_lead(
             names, CHANGED_THIS_ROUND, hist),
         "window": window,

@@ -77,7 +77,7 @@ _GATE_FILES = {
     "test_expr_determinism.py",   # two-seed PYTHONHASHSEED gate
     "test_plans.py",              # per-query plan contracts
     "test_entry.py",              # driver contract smoke
-    "test_bench_contract.py",     # bench HEADLINE resolution
+    "test_bench_contract.py",     # bench order = registry + bench-only
     "test_sources.py",            # loader contract
     "test_graph.py",              # graph operator unit pins
     "test_r15_opt.py",            # r15 optimization equivalence pins

@@ -3,10 +3,11 @@
 Round 10 proved the hand-maintained window's failure mode: a round
 with no commits re-spends all 50 driver slots re-proving already-green
 rows while 80 never-checked queries wait. The window is now a pure
-function of (committed CORRECTNESS history, registration order, this
-round's CHANGED_THIS_ROUND list) — these tests pin that function's
-priority semantics against synthetic histories AND pin the live window
-against the repo's real committed history.
+function of (committed CORRECTNESS history, registration order, the
+``CHANGED_THIS_ROUND`` name -> as-of round mapping); the hand-kept
+window lists are gone from queries/__init__.py. These tests pin that
+function's priority semantics against synthetic histories AND pin the
+live window against the repo's real committed history.
 """
 
 import json
@@ -89,7 +90,7 @@ def test_next_round_window_advances_automatically(tmp_path):
         n: {"hash_match": True, "rows_match": True, "err": None}
         for n in WINDOW})
     names = registered_names()
-    nxt = computed_window(names, [], root=tmp_path)
+    nxt = computed_window(names, {}, root=tmp_path)
     hist = driver_history(tmp_path)
     still_never = [n for n in names if n not in hist]
     assert nxt[:len(still_never)] == still_never[:WINDOW_SLOTS]
@@ -130,7 +131,7 @@ def test_r13_window_is_stalest_green_reproofs(tmp_path):
     hist2 = driver_history(tmp_path)
     assert [n for n in names if n not in hist2] == [], (
         "queue did not drain after a green r12 window")
-    nxt = computed_window(names, [], root=tmp_path)
+    nxt = computed_window(names, {}, root=tmp_path)
     pos = {n: i for i, n in enumerate(names)}
     expect = sorted(names, key=lambda n: (hist2[n][0], pos[n]))
     assert nxt == expect[:WINDOW_SLOTS]
@@ -178,13 +179,13 @@ def test_priority_order_on_synthetic_history(tmp_path):
     # the failed rows b (explicit hash mismatch — NOT green even with
     # rows_match, ADVICE r11) and c (error), registration order; then
     # green a
-    assert computed_window(reg, ["f"], slots=6, root=tmp_path) == \
+    assert computed_window(reg, {"f": 0}, slots=6, root=tmp_path) == \
         ["f", "d", "e", "b", "c", "a"]
     # a later GREEN row overrides an earlier fail, not vice versa
     _write_round(tmp_path, 3, {
         "c": {"hash_match": True, "rows_match": True, "err": None},
     })
-    assert computed_window(reg, [], slots=6, root=tmp_path) == \
+    assert computed_window(reg, {}, slots=6, root=tmp_path) == \
         ["d", "e", "f", "b", "a", "c"]
 
 
@@ -201,7 +202,7 @@ def test_rows_only_green_requires_absent_hash_evidence(tmp_path):
         "d": {"hash_match": None, "rows_match": True, "err": "no_oracle"},  # FAIL
     })
     # failed c, d (registration order) ahead of the rows-only greens
-    assert computed_window(reg, [], slots=4, root=tmp_path) == \
+    assert computed_window(reg, {}, slots=4, root=tmp_path) == \
         ["c", "d", "a", "b"]
 
 
@@ -230,8 +231,6 @@ def test_changed_name_retires_once_green_postdates_change(tmp_path):
         "c": {"hash_match": False, "rows_match": True, "err": None}})
     assert computed_window(reg, {"c": 12}, slots=4, root=tmp_path) == \
         ["c", "a", "b", "d"]
-    # legacy list form still means "always lead"
-    assert computed_window(reg, ["a"], slots=4, root=tmp_path)[0] == "a"
 
 
 def test_reproof_failure_holds_the_window(tmp_path):
@@ -263,13 +262,13 @@ def test_reproof_failure_holds_the_window(tmp_path):
 
 def test_unknown_changed_names_are_ignored(tmp_path):
     reg = ["a", "b"]
-    assert computed_window(reg, ["zz", "b"], slots=2, root=tmp_path) == \
+    assert computed_window(reg, {"zz": 0, "b": 0}, slots=2, root=tmp_path) == \
         ["b", "a"]
 
 
 def test_empty_history_means_registration_order(tmp_path):
     reg = [f"q{i}" for i in range(8)]
-    assert computed_window(reg, [], slots=5, root=tmp_path) == reg[:5]
+    assert computed_window(reg, {}, slots=5, root=tmp_path) == reg[:5]
 
 
 def test_corrupt_history_file_is_skipped(tmp_path):
@@ -277,4 +276,4 @@ def test_corrupt_history_file_is_skipped(tmp_path):
     (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
     _write_round(tmp_path, 2, {
         "a": {"hash_match": True, "rows_match": True, "err": None}})
-    assert computed_window(reg, [], slots=2, root=tmp_path) == ["b", "a"]
+    assert computed_window(reg, {}, slots=2, root=tmp_path) == ["b", "a"]
