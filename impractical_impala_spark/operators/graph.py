@@ -5,8 +5,10 @@ both are the custom-operator rule (a) composition: one join + groupBy
 per round, hash-partitioned on the node id, no driver-side data, run
 to the fixpoint by the shared ``_fixpoint`` loop below.
 
-Rounds needed = component diameter for CC, and near-dup clusters are
-shallow (every member overlaps the same content); the
+CC starts from the one-hop labels, so it needs at most component
+diameter - 1 label-changing rounds plus one that sees no change, and
+near-dup clusters are shallow (every member overlaps the same
+content); the
 large-star/small-star variants that halve diameter per round only pay
 off on deep web-graph-like components.
 """
@@ -88,12 +90,27 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     sum is an exact convergence test (``_fixpoint``). Deterministic:
     labels are ids, propagation is min() — no float or ordering
     sensitivity, so the result is hash-stable and oracle-checkable
-    against a recursive-CTE transitive closure. Raises if ``max_iter``
-    rounds (the component diameter) don't reach the fixpoint.
+    against a recursive-CTE transitive closure.
+
+    ``edges`` is read ONCE: the symmetrized list comes from one
+    ``inline`` (explode) of both orientations, not a self-union. A union
+    references the input twice in one plan, and above a cached
+    relation AQE gives each reference its own cache stage and reuses no
+    exchange, so the whole upstream (e.g. the LSH pair pipeline) would
+    run twice. No distinct: duplicate and reversed edges cannot change
+    a min, and each round's map-side partial min collapses them.
+
+    The fixpoint starts from the one-hop labels min(node, neighbours),
+    which is what the first round from the identity labeling computes,
+    so that round is skipped. Each seed label is an id in the node's
+    own component and at most the node's id, so labels still only
+    decrease toward the component minimum. ``max_iter`` bounds the
+    rounds after the seed, at most the component diameter; raises if
+    they don't reach the fixpoint.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
-        .distinct().cache()
+    sym = edges.select(F.inline(F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b"))))).cache()
 
     def step(labels: DataFrame) -> DataFrame:
         prop = (sym.join(labels, sym.a == labels.node)
@@ -101,8 +118,8 @@ def connected_components(edges: DataFrame, src: str, dst: str,
         return (prop.unionByName(labels.select("node", "lbl"))
                 .groupBy("node").agg(F.min("lbl").alias("lbl")))
 
-    init = sym.select(F.col("a").alias("node")).distinct() \
-        .withColumn("lbl", F.col("node"))
+    init = sym.groupBy(F.col("a").alias("node")) \
+        .agg(F.least(F.col("a"), F.min("b")).alias("lbl"))
     try:
         labels = _fixpoint(init, step, "lbl", max_iter,
                            "connected_components")
