@@ -46,6 +46,14 @@ CHANGED_THIS_ROUND: dict[str, int] = {
     # threshold, so ann_dedup_pipeline's survivor joins now broadcast
     # it (shape only; values and expression hash unchanged).
     "ann_dedup_pipeline": 16,
+    # One cached MinHash signature relation (doc_id, dh, mh0..mh15) for
+    # every minhash query, with band keys derived after the cache, in
+    # place of per-query caches of band keys or mh + band keys (values
+    # unchanged; expression hash only):
+    "dedup_minhash_lsh": 16,
+    "minhash_calibration": 16,
+    "dedup_lsh_audit": 16,          # reads dedup_minhash_lsh's pairs
+    "dedup_cross_source_matrix": 16,  # reads dedup_minhash_lsh's pairs
 }
 
 from ..registry import registered_names  # noqa: E402

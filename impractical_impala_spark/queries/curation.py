@@ -339,32 +339,21 @@ def split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_oracle() -> str:
-    from .dedup import MUT_OFFSET, _minhash_oracle
+    from .dedup import MUT_OFFSET, _duck_components, _minhash_oracle
 
     h = ("CAST(('0x' || substr(md5(CAST(group_id AS VARCHAR)), 1, 7))"
          f" AS BIGINT) % {SPLIT_BUCKETS}")
     return f"""
 WITH RECURSIVE pairs AS (
     SELECT doc_a, doc_b FROM ({_minhash_oracle()})
-), nodes AS (
-    SELECT doc_a AS node FROM pairs UNION SELECT doc_b FROM pairs
-), edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs
-    UNION SELECT doc_b, doc_a FROM pairs
-), reach(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-), comp AS (
-    SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-), corpus AS (
+), {_duck_components("pairs", "doc_a", "doc_b")}, corpus AS (
     SELECT doc_id FROM documents
     UNION ALL
     SELECT doc_id + {MUT_OFFSET} FROM documents WHERE doc_id % 3 = 0
 ), assigned AS (
     SELECT c.doc_id,
            CAST(COALESCE(comp.cluster_id, c.doc_id) AS BIGINT) AS group_id
-    FROM corpus c LEFT JOIN comp ON c.doc_id = comp.doc_id
+    FROM corpus c LEFT JOIN comp ON c.doc_id = comp.node
 )
 SELECT doc_id, group_id, {_split_case(h)} AS split
 FROM assigned

@@ -39,7 +39,7 @@ P = 2147483647  # 2^31 - 1
 # pinned OOM at lake scale.
 def _maybe_broadcast(df: DataFrame, sf_dir: str) -> DataFrame:
     return maybe_broadcast(df, sf_dir, "documents")
-NUM_PERM, BANDS, ROWS_PER_BAND = 16, 4, 4
+NUM_PERM, BANDS = 16, 4
 JACCARD_T = 0.4
 MUT_OFFSET = 1_000_000
 COPY_OFFSET = 2_000_000
@@ -161,54 +161,92 @@ FROM alldocs GROUP BY md5(text)
 
 
 # ---------------------------------------------------------------- minhash LSH
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(16 perms) -> LSH(4 bands x 4 rows) -> band-bucket join ->
-    exact-Jaccard confirmation. Candidate generation never compares all
-    pairs: docs meet only inside equal band buckets (at 100 TB this is
-    the standard shuffle-friendly near-dup join)."""
+# One definition per stage of the MinHash -> band -> candidate-pair ->
+# Jaccard pipeline, in each engine; every minhash query composes them.
+def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, dh, mh0..mh{NUM_PERM-1})`` over the augmented corpus,
+    cached. Every query builds the identical plan, so one session holds
+    ONE cache entry for all of them; band keys are derived per banding
+    after the cache (``_band_pairs``)."""
     ds = _spark_docsets(spark, sf_dir, mutated=True)
-    mh_cols = [
-        F.array_min(F.expr(f"transform(dh, h -> ({a} * h + {b}) % {P})")).alias(f"mh{i}")
+    return ds.select("doc_id", "dh", *[
+        F.array_min(F.expr(
+            f"transform(dh, h -> ({a} * h + {b}) % {P})")).alias(f"mh{i}")
         for i, (a, b) in enumerate(PERMS)
-    ]
-    sigs = ds.select("doc_id", "dh", *mh_cols)
-    band_exprs = [
-        F.concat_ws("_", *[F.col(f"mh{band * ROWS_PER_BAND + r}")
-                           for r in range(ROWS_PER_BAND)]).alias(f"band{band}")
-        for band in range(BANDS)
-    ]
-    sigs = sigs.select("doc_id", "dh", *band_exprs).cache()
-    # candidate generation on (id, band key) only — the shingle-hash
-    # arrays never ride through the pair-dedup shuffle. Band rows come
-    # from ONE explode pass over the cached signatures: a 4-way union
-    # would re-read the cache 4x and quadruple the map-task count of
-    # every downstream stage (measured: the union plan ran 256-task
-    # stages over a corpus that needs 64).
+    ]).cache()
+
+
+def _band_pairs(sigs: DataFrame, n_bands: int, sf_dir: str) -> DataFrame:
+    """Distinct LSH candidate pairs ``(doc_a < doc_b)``: docs sharing
+    any of ``n_bands`` bands of ``NUM_PERM // n_bands`` signature rows.
+    Candidate generation never compares all pairs: docs meet only
+    inside equal band buckets (at 100 TB this is the standard
+    shuffle-friendly near-dup join), on (id, band key) only — the
+    shingle-hash arrays never ride through the pair-dedup shuffle.
+    Band rows come from ONE explode pass over the cached signatures: a
+    per-band union would re-read the cache once per band and multiply
+    the map-task count of every downstream stage (measured: the 4-way
+    union plan ran 256-task stages over a corpus that needs 64)."""
+    rpb = NUM_PERM // n_bands
     band_structs = F.array(*[
-        F.struct(F.lit(band).alias("band_idx"),
-                 F.col(f"band{band}").alias("bkey"))
-        for band in range(BANDS)
+        F.struct(
+            F.lit(band).alias("band_idx"),
+            F.concat_ws("_", *[F.col(f"mh{band * rpb + r}")
+                               for r in range(rpb)]).alias("bkey"))
+        for band in range(n_bands)
     ])
-    buckets = (
-        sigs.select("doc_id", F.explode(band_structs).alias("bb"))
-        .select("doc_id", "bb.band_idx", "bb.bkey")
-    )
+    buckets = (sigs.select("doc_id", F.explode(band_structs).alias("bb"))
+               .select("doc_id", "bb.band_idx", "bb.bkey"))
     a, b = buckets.alias("a"), buckets.alias("b")
     # small corpora broadcast (ids + band keys only) for plan
     # determinism; past the size gate the join shuffles on the band key,
     # which is the correct lake-scale candidate-generation plan
-    pairs = (
-        a.join(_maybe_broadcast(b, sf_dir),
-               (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.bkey") == F.col("b.bkey"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    dha = sigs.select(F.col("doc_id").alias("doc_a"), F.col("dh").alias("dha"))
-    dhb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("dh").alias("dhb"))
-    pairs = pairs.join(_maybe_broadcast(dha, sf_dir), "doc_a") \
-                 .join(_maybe_broadcast(dhb, sf_dir), "doc_b")
+    return (a.join(
+        _maybe_broadcast(b, sf_dir),
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.bkey") == F.col("b.bkey"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"]))
+
+
+def _attach_sides(pairs: DataFrame, sigs: DataFrame, cols: list[str],
+                  sf_dir: str) -> DataFrame:
+    """``pairs`` with each signature column ``c`` of both members
+    attached as ``{c}a`` / ``{c}b`` (``dh`` -> ``dha``, ``dhb``)."""
+    for s in ("a", "b"):
+        side = sigs.select(F.col("doc_id").alias(f"doc_{s}"),
+                           *[F.col(c).alias(f"{c}{s}") for c in cols])
+        pairs = pairs.join(_maybe_broadcast(side, sf_dir), f"doc_{s}")
+    return pairs
+
+
+def _jacc_ppm(a: str, b: str) -> str:
+    """Exact Jaccard of the hash sets ``a``, ``b`` in integer ppm
+    (inter * 1e6 div union). 64-bit BEFORE the multiply: size() is
+    INT32, and in non-ANSI mode ``int * 1000000`` wraps silently for
+    docs with >2147 shingles — the DuckDB twin's len() is BIGINT, so
+    the narrow form is a scale-dependent cross-engine divergence
+    (ADVICE r13 #2)."""
+    return (f"cast(size(array_intersect({a}, {b})) as bigint) * 1000000"
+            f" div (cast(size({a}) as bigint) + size({b})"
+            f" - size(array_intersect({a}, {b})))")
+
+
+def _duck_jacc_ppm(a: str, b: str) -> str:
+    """DuckDB twin of ``_jacc_ppm``."""
+    inter = f"len(list_intersect({a}, {b}))"
+    return (f"CAST({inter} AS BIGINT) * 1000000"
+            f" // (CAST(len({a}) AS BIGINT) + len({b}) - {inter})")
+
+
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(16 perms) -> LSH(4 bands x 4 rows) -> band-bucket join ->
+    exact-Jaccard confirmation (see ``_band_pairs``)."""
+    sigs = _minhash_sigs(spark, sf_dir)
+    pairs = _attach_sides(_band_pairs(sigs, BANDS, sf_dir), sigs, ["dh"],
+                          sf_dir)
     inter = F.size(F.array_intersect("dha", "dhb"))
     union = F.size("dha") + F.size("dhb") - inter
     return (
@@ -218,37 +256,52 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_minhash_ctes() -> str:
-    """The minhash→banding→confirmed-pairs pipeline as composable CTE
-    bodies (docsets, sigs, buckets, cand, lsh_pairs) — shared by the
-    dedup_minhash_lsh oracle and the dedup_lsh_audit oracle."""
+def _duck_sigs() -> str:
+    """DuckDB twin of ``_minhash_sigs``: the ``docsets`` and ``sigs``
+    CTEs."""
     mh = ",\n           ".join(
         f"list_min(list_transform(dh, h -> ({a} * h + {b}) % {P})) AS mh{i}"
         for i, (a, b) in enumerate(PERMS)
-    )
-    bands = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, dh, {band} AS band_idx, "
-        + " || '_' || ".join(
-            f"CAST(mh{band * ROWS_PER_BAND + r} AS VARCHAR)"
-            for r in range(ROWS_PER_BAND))
-        + " AS bkey FROM sigs"
-        for band in range(BANDS)
     )
     return f"""{_duck_docsets(mutated=True).lstrip()},
 sigs AS (
     SELECT doc_id, dh,
            {mh}
     FROM docsets
-),
-buckets AS (
+)"""
+
+
+def _duck_band_ctes(n_bands: int, sfx: str = "") -> str:
+    """DuckDB twin of ``_band_pairs`` + ``_attach_sides(["dh"])`` over
+    ``sigs``: ``buckets{sfx}`` and ``cand{sfx}(doc_a, doc_b, dha,
+    dhb)``."""
+    rpb = NUM_PERM // n_bands
+    bands = "\n    UNION ALL\n".join(
+        f"    SELECT doc_id, {band} AS band_idx, "
+        + " || '_' || ".join(f"CAST(mh{band * rpb + r} AS VARCHAR)"
+                             for r in range(rpb))
+        + " AS bkey FROM sigs"
+        for band in range(n_bands)
+    )
+    return f"""buckets{sfx} AS (
 {bands}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.dh AS dha, b.dh AS dhb
-    FROM buckets a JOIN buckets b
-      ON a.band_idx = b.band_idx AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-),
+), cand{sfx} AS (
+    SELECT p.doc_a, p.doc_b, sa.dh AS dha, sb.dh AS dhb
+    FROM (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM buckets{sfx} a JOIN buckets{sfx} b
+            ON a.band_idx = b.band_idx AND a.bkey = b.bkey
+           AND a.doc_id < b.doc_id) p
+    JOIN sigs sa ON sa.doc_id = p.doc_a
+    JOIN sigs sb ON sb.doc_id = p.doc_b
+)"""
+
+
+def _duck_minhash_ctes() -> str:
+    """The minhash→banding→confirmed-pairs pipeline as composable CTE
+    bodies (docsets, sigs, buckets, cand, lsh_pairs) — shared by the
+    dedup_minhash_lsh oracle and the dedup_lsh_audit oracle."""
+    return f"""{_duck_sigs()},
+{_duck_band_ctes(BANDS)},
 lsh_pairs AS (
     SELECT doc_a, doc_b,
            CAST(len(list_intersect(dha, dhb)) AS DOUBLE)
@@ -534,26 +587,35 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _clusters_oracle() -> str:
-    return f"""
-WITH RECURSIVE pairs AS (
-    SELECT doc_a, doc_b FROM ({_minhash_oracle()})
-), nodes AS (
-    SELECT doc_a AS node FROM pairs
+def _duck_components(pairs: str, a: str, b: str) -> str:
+    """DuckDB twin of operators/graph.py::connected_components over the
+    edges ``a``-``b`` of the CTE ``pairs``: CTE bodies ``nodes``,
+    ``edges``, ``reach(node, lbl)`` (recursive transitive closure — the
+    query needs ``WITH RECURSIVE``) and ``comp(node, cluster_id)``,
+    cluster_id the smallest node id in the component."""
+    return f"""nodes AS (
+    SELECT {a} AS node FROM {pairs}
     UNION
-    SELECT doc_b FROM pairs
+    SELECT {b} FROM {pairs}
 ), edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs
+    SELECT {a} AS a, {b} AS b FROM {pairs}
     UNION
-    SELECT doc_b, doc_a FROM pairs
+    SELECT {b}, {a} FROM {pairs}
 ), reach(node, lbl) AS (
     SELECT node, node FROM nodes
     UNION
     SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
 ), comp AS (
-    SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-)
-SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+    SELECT node, MIN(lbl) AS cluster_id FROM reach GROUP BY node
+)"""
+
+
+def _clusters_oracle() -> str:
+    return f"""
+WITH RECURSIVE pairs AS (
+    SELECT doc_a, doc_b FROM ({_minhash_oracle()})
+), {_duck_components("pairs", "doc_a", "doc_b")}
+SELECT node AS doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
        CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS n_members
 FROM comp
 """
@@ -599,18 +661,8 @@ def _survivors_oracle() -> str:
     return f"""
 WITH RECURSIVE pairs AS (
     SELECT doc_a, doc_b FROM ({_minhash_oracle()})
-), nodes AS (
-    SELECT doc_a AS node FROM pairs UNION SELECT doc_b FROM pairs
-), edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs
-    UNION SELECT doc_b, doc_a FROM pairs
-), reach(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-), removed AS (
-    SELECT node AS doc_id FROM reach GROUP BY node
-    HAVING node <> MIN(lbl)
+), {_duck_components("pairs", "doc_a", "doc_b")}, removed AS (
+    SELECT node AS doc_id FROM comp WHERE node <> cluster_id
 ), corpus AS (
     SELECT doc_id, lang FROM documents
     UNION ALL
@@ -1007,68 +1059,21 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (matching components / 16) against the exact shingle Jaccard, and
     report the calibration per estimator bucket: n_pairs, mean true
     Jaccard, mean absolute error — all integer ppm (sums of exact
-    integers, one div per aggregate). Self-contained recomputation of
-    the signature pipeline (the dedup_survivors convention); candidate
-    generation stays band-bucketed, so the audit costs what the dedup
-    run costs, never all-pairs. This is the measurement that justifies
+    integers, one div per aggregate). Same signatures and candidates
+    as dedup_minhash_lsh (``_minhash_sigs``, ``_band_pairs``), so the
+    audit costs what the dedup run costs, never all-pairs. This is the measurement that justifies
     NUM_PERM=16: more permutations buy error ~1/sqrt(n_perm)."""
-    ds = _spark_docsets(spark, sf_dir, mutated=True)
-    mh_cols = [
-        F.array_min(F.expr(
-            f"transform(dh, h -> ({a} * h + {b}) % {P})")).alias(f"mh{i}")
-        for i, (a, b) in enumerate(PERMS)
-    ]
-    sigs = ds.select("doc_id", "dh", *mh_cols)
-    band_exprs = [
-        F.concat_ws("_", *[F.col(f"mh{band * ROWS_PER_BAND + r}")
-                           for r in range(ROWS_PER_BAND)]).alias(f"band{band}")
-        for band in range(BANDS)
-    ]
-    sigs = sigs.select("doc_id", "dh",
-                       *[F.col(f"mh{i}") for i in range(NUM_PERM)],
-                       *band_exprs).cache()
-    band_structs = F.array(*[
-        F.struct(F.lit(band).alias("band_idx"),
-                 F.col(f"band{band}").alias("bkey"))
-        for band in range(BANDS)
-    ])
-    buckets = (
-        sigs.select("doc_id", F.explode(band_structs).alias("bb"))
-        .select("doc_id", "bb.band_idx", "bb.bkey")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    pairs = (
-        a.join(_maybe_broadcast(b, sf_dir),
-               (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.bkey") == F.col("b.bkey"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"),
-                     F.col("dh").alias("dha"),
-                     *[F.col(f"mh{i}").alias(f"ma{i}")
-                       for i in range(NUM_PERM)])
-    sb = sigs.select(F.col("doc_id").alias("doc_b"),
-                     F.col("dh").alias("dhb"),
-                     *[F.col(f"mh{i}").alias(f"mb{i}")
-                       for i in range(NUM_PERM)])
-    joined = pairs.join(_maybe_broadcast(sa, sf_dir), "doc_a") \
-                  .join(_maybe_broadcast(sb, sf_dir), "doc_b")
-    matches = sum(
-        (F.col(f"ma{i}") == F.col(f"mb{i}")).cast("long")
-        for i in range(NUM_PERM))
-    inter = F.size(F.array_intersect("dha", "dhb")).cast("long")
-    union = (F.size("dha") + F.size("dhb")).cast("long") - inter
-    scored = joined.select(
-        matches.alias("est_matches"),
-        inter.alias("inter"), union.alias("uni"))
+    sigs = _minhash_sigs(spark, sf_dir)
+    mh = [f"mh{i}" for i in range(NUM_PERM)]
+    joined = _attach_sides(_band_pairs(sigs, BANDS, sf_dir), sigs,
+                           ["dh", *mh], sf_dir)
+    matches = sum((F.col(f"{c}a") == F.col(f"{c}b")).cast("long")
+                  for c in mh)
     est_ppm = F.expr(f"est_matches * 1000000 div {NUM_PERM}")
-    return (scored
-            .select("est_matches",
-                    F.expr("inter * 1000000 div uni").alias("true_ppm"),
-                    est_ppm.alias("est_ppm"))
+    return (joined
+            .select(matches.alias("est_matches"),
+                    F.expr(_jacc_ppm("dha", "dhb")).alias("true_ppm"))
+            .select("est_matches", "true_ppm", est_ppm.alias("est_ppm"))
             .groupBy("est_matches", "est_ppm")
             .agg(F.count(F.lit(1)).alias("n_pairs"),
                  F.expr("sum(true_ppm) div count(1)").alias("mean_true_ppm"),
@@ -1084,23 +1089,11 @@ def _calibration_oracle() -> str:
     return f"""
 WITH {_duck_minhash_ctes()},
 scored AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ({match_terms}) AS est_matches,
-           CAST(len(list_intersect(a.dh, b.dh)) * 1000000
-                // (len(a.dh) + len(b.dh) - len(list_intersect(a.dh, b.dh)))
-                AS BIGINT) AS true_ppm
-    FROM (SELECT DISTINCT s.doc_id, s.dh, s.mh0, s.mh1, s.mh2, s.mh3,
-                 s.mh4, s.mh5, s.mh6, s.mh7, s.mh8, s.mh9, s.mh10,
-                 s.mh11, s.mh12, s.mh13, s.mh14, s.mh15
-          FROM sigs s) a
-    JOIN (SELECT DISTINCT s.doc_id, s.dh, s.mh0, s.mh1, s.mh2, s.mh3,
-                 s.mh4, s.mh5, s.mh6, s.mh7, s.mh8, s.mh9, s.mh10,
-                 s.mh11, s.mh12, s.mh13, s.mh14, s.mh15
-          FROM sigs s) b
-      ON a.doc_id < b.doc_id
-    WHERE EXISTS (SELECT 1 FROM buckets x JOIN buckets y
-                  ON x.band_idx = y.band_idx AND x.bkey = y.bkey
-                  WHERE x.doc_id = a.doc_id AND y.doc_id = b.doc_id)
+    SELECT ({match_terms}) AS est_matches,
+           {_duck_jacc_ppm('c.dha', 'c.dhb')} AS true_ppm
+    FROM cand c
+    JOIN sigs a ON a.doc_id = c.doc_a
+    JOIN sigs b ON b.doc_id = c.doc_b
 )
 SELECT est_matches,
        CAST(est_matches * 1000000 // {NUM_PERM} AS BIGINT) AS est_ppm,
@@ -1157,14 +1150,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            # BIGINT before the multiply — same 32-bit wraparound trap
-            # as dedup_banding_sweep's jacc_ppm (ADVICE r13 #2); the
-            # oracle computes in DuckDB BIGINT.
-            F.expr("cast(size(array_intersect(a.dh, b.dh)) as bigint)"
-                   " * 1000000"
-                   " div (cast(size(a.dh) as bigint) + size(b.dh)"
-                   " - size(array_intersect(a.dh, b.dh)))")
-            .alias("jacc_ppm")))
+            F.expr(_jacc_ppm("a.dh", "b.dh")).alias("jacc_ppm")))
     ts = ", ".join(str(t) for t in SWEEP_T_PPM)
     fan = (pairs.withColumn("t_ppm", F.explode(F.expr(f"array({ts})")))
            .filter(F.col("jacc_ppm") >= F.col("t_ppm")))
@@ -1204,9 +1190,7 @@ ds AS (
 ),
 pairs AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           len(list_intersect(a.dh, b.dh)) * 1000000
-           // (len(a.dh) + len(b.dh) - len(list_intersect(a.dh, b.dh)))
-               AS jacc_ppm
+           {_duck_jacc_ppm('a.dh', 'b.dh')} AS jacc_ppm
     FROM ds a JOIN ds b
       ON a.lang = b.lang AND a.source = b.source
      AND a.len_band = b.len_band AND a.blk = b.blk
@@ -1265,52 +1249,17 @@ def dedup_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per configuration one band-key shuffle over (id, key)
     rows and one pair-dedup — the dedup_minhash_lsh plan re-run 3x on
     the cached signature frame; never an all-pairs comparison."""
-    ds = _spark_docsets(spark, sf_dir, mutated=True)
-    mh_cols = [
-        F.array_min(F.expr(
-            f"transform(dh, h -> ({a} * h + {b}) % {P})")).alias(f"mh{i}")
-        for i, (a, b) in enumerate(PERMS)
-    ]
-    sigs = ds.select("doc_id", "dh", *mh_cols).cache()
+    sigs = _minhash_sigs(spark, sf_dir)
     planted = (load_table(spark, sf_dir, "documents")
                .filter(F.col("doc_id") % 3 == 0)
                .agg(F.count(F.lit(1)).alias("n_planted")))
-    # 64-bit BEFORE the multiply: size() is INT32, and in non-ANSI mode
-    # `int * 1000000` wraps silently for docs with >2147 shingles —
-    # the DuckDB oracle's len() is BIGINT, so the narrow form is a
-    # scale-dependent cross-engine divergence (ADVICE r13 #2).
-    jacc_ppm = F.expr(
-        "cast(size(array_intersect(dha, dhb)) as bigint) * 1000000"
-        " div (cast(size(dha) as bigint) + size(dhb)"
-        " - size(array_intersect(dha, dhb)))")
     out = None
     for nb in BAND_SWEEP:
         rpb = NUM_PERM // nb
-        band_structs = F.array(*[
-            F.struct(
-                F.lit(band).alias("band_idx"),
-                F.concat_ws("_", *[F.col(f"mh{band * rpb + r}")
-                                   for r in range(rpb)]).alias("bkey"))
-            for band in range(nb)
-        ])
-        buckets = (sigs.select("doc_id", F.explode(band_structs).alias("bb"))
-                   .select("doc_id", "bb.band_idx", "bb.bkey"))
-        ba, bb = buckets.alias("a"), buckets.alias("b")
-        pairs = (ba.join(
-            _maybe_broadcast(bb, sf_dir),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-        dha = sigs.select(F.col("doc_id").alias("doc_a"),
-                          F.col("dh").alias("dha"))
-        dhb = sigs.select(F.col("doc_id").alias("doc_b"),
-                          F.col("dh").alias("dhb"))
-        scored = (pairs.join(_maybe_broadcast(dha, sf_dir), "doc_a")
-                  .join(_maybe_broadcast(dhb, sf_dir), "doc_b")
-                  .select("doc_a", "doc_b", jacc_ppm.alias("jp")))
+        scored = (_attach_sides(_band_pairs(sigs, nb, sf_dir), sigs, ["dh"],
+                                sf_dir)
+                  .select("doc_a", "doc_b",
+                          F.expr(_jacc_ppm("dha", "dhb")).alias("jp")))
         stat = scored.agg(
             F.count(F.lit(1)).alias("n_cand"),
             F.sum(F.expr(f"cast(jp >= {JACCARD_T_PPM} as int)"))
@@ -1335,43 +1284,17 @@ def dedup_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _banding_sweep_oracle() -> str:
-    mh = ",\n           ".join(
-        f"list_min(list_transform(dh, h -> ({a} * h + {b}) % {P})) AS mh{i}"
-        for i, (a, b) in enumerate(PERMS)
-    )
-    blocks = [f"""{_duck_docsets(mutated=True).lstrip()},
-sigs AS (
-    SELECT doc_id, dh,
-           {mh}
-    FROM docsets
-),
+    blocks = [f"""{_duck_sigs()},
 planted AS (
     SELECT COUNT(*) AS n_planted FROM documents WHERE doc_id % 3 = 0
 )"""]
     selects = []
     for nb in BAND_SWEEP:
         rpb = NUM_PERM // nb
-        bands = "\n    UNION ALL\n".join(
-            f"    SELECT doc_id, dh, {band} AS band_idx, "
-            + " || '_' || ".join(
-                f"CAST(mh{band * rpb + r} AS VARCHAR)"
-                for r in range(rpb))
-            + " AS bkey FROM sigs"
-            for band in range(nb)
-        )
-        blocks.append(f""", buckets{nb} AS (
-{bands}
-), cand{nb} AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.dh AS dha, b.dh AS dhb
-    FROM buckets{nb} a JOIN buckets{nb} b
-      ON a.band_idx = b.band_idx AND a.bkey = b.bkey
-     AND a.doc_id < b.doc_id
-), stat{nb} AS (
+        blocks.append(f""", {_duck_band_ctes(nb, str(nb))}, stat{nb} AS (
     SELECT {nb} AS n_bands, {rpb} AS rows_per_band,
            CAST(COUNT(*) AS BIGINT) AS n_cand,
-           CAST(SUM(CASE WHEN len(list_intersect(dha, dhb)) * 1000000
-                    // (len(dha) + len(dhb) - len(list_intersect(dha, dhb)))
+           CAST(SUM(CASE WHEN {_duck_jacc_ppm('dha', 'dhb')}
                     >= {JACCARD_T_PPM} THEN 1 ELSE 0 END) AS BIGINT)
                AS n_confirmed,
            CAST(SUM(CASE WHEN doc_b - doc_a = {MUT_OFFSET}
@@ -1555,13 +1478,6 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(_SPARK_HASHES.format(s=_spark_shingles_k(k)))
                 .alias(f"dh{k}") for k in SHINGLE_SWEEP])
             .cache())
-    jt_ppm = round(JACCARD_T * 1_000_000)
-
-    def jacc(k: int) -> str:
-        return (f"cast(size(array_intersect(a_dh{k}, b_dh{k})) as bigint)"
-                f" * 1000000"
-                f" div (cast(size(a_dh{k}) as bigint) + size(b_dh{k})"
-                f" - size(array_intersect(a_dh{k}, b_dh{k})))")
 
     def panel(offset: int, pred: str) -> DataFrame:
         a = sets.select(F.col("doc_id").alias("a_id"), *[
@@ -1569,8 +1485,8 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = sets.select((F.col("doc_id") - offset).alias("a_id"), *[
             F.col(f"dh{k}").alias(f"b_dh{k}") for k in SHINGLE_SWEEP])
         return (a.filter(F.expr(pred)).join(b, "a_id")
-                .select(*[F.expr(jacc(k)).alias(f"j{k}")
-                          for k in SHINGLE_SWEEP]))
+                .select(*[F.expr(_jacc_ppm(f"a_dh{k}", f"b_dh{k}"))
+                          .alias(f"j{k}") for k in SHINGLE_SWEEP]))
 
     planted = panel(MUT_OFFSET, "a_id % 3 = 0 AND a_id < 1000000")
     # unrelated baseline: consecutive BASE doc ids (both < MUT_OFFSET)
@@ -1578,7 +1494,7 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pl = planted.agg(
         F.count(F.lit(1)).alias("n_planted"),
         *[F.sum(f"j{k}").alias(f"pj{k}") for k in SHINGLE_SWEEP],
-        *[F.sum(F.expr(f"cast(j{k} >= {jt_ppm} as long)"))
+        *[F.sum(F.expr(f"cast(j{k} >= {JACCARD_T_PPM} as long)"))
           .alias(f"pr{k}") for k in SHINGLE_SWEEP])
     nb = neighbor.agg(
         F.count(F.lit(1)).alias("n_neighbor"),
@@ -1602,20 +1518,16 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_sweep_oracle() -> str:
-    jt_ppm = round(JACCARD_T * 1_000_000)
     dh_cols = ",\n           ".join(
         f"{_DUCK_HASHES.format(s=_duck_shingles_k(k))} AS dh{k}"
         for k in SHINGLE_SWEEP)
 
-    def jacc(k: int, side_a: str = "a", side_b: str = "b") -> str:
-        inter = f"len(list_intersect({side_a}.dh{k}, {side_b}.dh{k}))"
-        return (f"CAST({inter} AS BIGINT) * 1000000"
-                f" // (CAST(len({side_a}.dh{k}) AS BIGINT)"
-                f" + len({side_b}.dh{k}) - {inter})")
+    def jacc(k: int) -> str:
+        return _duck_jacc_ppm(f"a.dh{k}", f"b.dh{k}")
 
     pj = ", ".join(
         f"CAST(SUM({jacc(k)}) AS BIGINT) AS pj{k},"
-        f" CAST(SUM(CASE WHEN {jacc(k)} >= {jt_ppm} THEN 1 ELSE 0 END)"
+        f" CAST(SUM(CASE WHEN {jacc(k)} >= {JACCARD_T_PPM} THEN 1 ELSE 0 END)"
         f" AS BIGINT) AS pr{k}"
         for k in SHINGLE_SWEEP)
     nj = ", ".join(
@@ -1702,13 +1614,6 @@ def dedup_shingle_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(_SPARK_HASHES.format(s=_spark_shingles_k(k)))
                 .alias(f"dh{k}") for k in SHINGLE_SWEEP])
             .cache())
-    jt_ppm = round(JACCARD_T * 1_000_000)
-
-    def jacc(k: int) -> str:
-        return (f"cast(size(array_intersect(a_dh{k}, b_dh{k})) as bigint)"
-                f" * 1000000"
-                f" div (cast(size(a_dh{k}) as bigint) + size(b_dh{k})"
-                f" - size(array_intersect(a_dh{k}, b_dh{k})))")
 
     def panel(offset: int, pred: str) -> DataFrame:
         a = sets.select(F.col("doc_id").alias("a_id"), "lang", "source", *[
@@ -1717,15 +1622,15 @@ def dedup_shingle_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(f"dh{k}").alias(f"b_dh{k}") for k in SHINGLE_SWEEP])
         return (a.filter(F.expr(pred)).join(b, "a_id")
                 .select("lang", "source", *[
-                    F.expr(jacc(k)).alias(f"j{k}")
-                    for k in SHINGLE_SWEEP]))
+                    F.expr(_jacc_ppm(f"a_dh{k}", f"b_dh{k}"))
+                    .alias(f"j{k}") for k in SHINGLE_SWEEP]))
 
     planted = panel(MUT_OFFSET, "a_id % 3 = 0 AND a_id < 1000000")
     neighbor = panel(1, "a_id % 3 != 2 AND a_id < 1000000")
     pl = planted.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_planted"),
         *[F.sum(f"j{k}").alias(f"pj{k}") for k in SHINGLE_SWEEP],
-        *[F.sum(F.expr(f"cast(j{k} >= {jt_ppm} as long)"))
+        *[F.sum(F.expr(f"cast(j{k} >= {JACCARD_T_PPM} as long)"))
           .alias(f"pr{k}") for k in SHINGLE_SWEEP])
     nb = neighbor.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_neighbor"),
@@ -1762,20 +1667,16 @@ def dedup_shingle_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_by_source_oracle() -> str:
-    jt_ppm = round(JACCARD_T * 1_000_000)
     dh_cols = ",\n           ".join(
         f"{_DUCK_HASHES.format(s=_duck_shingles_k(k))} AS dh{k}"
         for k in SHINGLE_SWEEP)
 
     def jacc(k: int) -> str:
-        inter = f"len(list_intersect(a.dh{k}, b.dh{k}))"
-        return (f"CAST({inter} AS BIGINT) * 1000000"
-                f" // (CAST(len(a.dh{k}) AS BIGINT)"
-                f" + len(b.dh{k}) - {inter})")
+        return _duck_jacc_ppm(f"a.dh{k}", f"b.dh{k}")
 
     pj = ", ".join(
         f"CAST(SUM({jacc(k)}) AS BIGINT) AS pj{k},"
-        f" CAST(SUM(CASE WHEN {jacc(k)} >= {jt_ppm} THEN 1 ELSE 0 END)"
+        f" CAST(SUM(CASE WHEN {jacc(k)} >= {JACCARD_T_PPM} THEN 1 ELSE 0 END)"
         f" AS BIGINT) AS pr{k}"
         for k in SHINGLE_SWEEP)
     nj = ", ".join(
@@ -1861,51 +1762,20 @@ def dedup_banding_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached signature frame; the slice attach is one corpus-keyed equi
     join of (doc_id, lang, source); the final aggregates key on the
     model-size (lang, source) domain. Never all-pairs."""
-    ds = _spark_docsets(spark, sf_dir, mutated=True)
-    mh_cols = [
-        F.array_min(F.expr(
-            f"transform(dh, h -> ({a} * h + {b}) % {P})")).alias(f"mh{i}")
-        for i, (a, b) in enumerate(PERMS)
-    ]
-    sigs = ds.select("doc_id", "dh", *mh_cols).cache()
+    sigs = _minhash_sigs(spark, sf_dir)
     docs_ls = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("base_a"), "lang", "source")
     planted = (load_table(spark, sf_dir, "documents")
                .filter(F.col("doc_id") % 3 == 0)
                .groupBy("lang", "source")
                .agg(F.count(F.lit(1)).alias("n_planted")))
-    jacc_ppm = F.expr(
-        "cast(size(array_intersect(dha, dhb)) as bigint) * 1000000"
-        " div (cast(size(dha) as bigint) + size(dhb)"
-        " - size(array_intersect(dha, dhb)))")
     out = None
     for nb in BAND_SWEEP:
         rpb = NUM_PERM // nb
-        band_structs = F.array(*[
-            F.struct(
-                F.lit(band).alias("band_idx"),
-                F.concat_ws("_", *[F.col(f"mh{band * rpb + r}")
-                                   for r in range(rpb)]).alias("bkey"))
-            for band in range(nb)
-        ])
-        buckets = (sigs.select("doc_id", F.explode(band_structs).alias("bb"))
-                   .select("doc_id", "bb.band_idx", "bb.bkey"))
-        ba, bb = buckets.alias("a"), buckets.alias("b")
-        pairs = (ba.join(
-            _maybe_broadcast(bb, sf_dir),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-        dha = sigs.select(F.col("doc_id").alias("doc_a"),
-                          F.col("dh").alias("dha"))
-        dhb = sigs.select(F.col("doc_id").alias("doc_b"),
-                          F.col("dh").alias("dhb"))
-        scored = (pairs.join(_maybe_broadcast(dha, sf_dir), "doc_a")
-                  .join(_maybe_broadcast(dhb, sf_dir), "doc_b")
-                  .select("doc_a", "doc_b", jacc_ppm.alias("jp")))
+        scored = (_attach_sides(_band_pairs(sigs, nb, sf_dir), sigs, ["dh"],
+                                sf_dir)
+                  .select("doc_a", "doc_b",
+                          F.expr(_jacc_ppm("dha", "dhb")).alias("jp")))
         sliced = (scored.withColumn("base_a", F.expr(
             f"case when doc_a >= {MUT_OFFSET}"
             f" then doc_a - {MUT_OFFSET} else doc_a end"))
@@ -1944,16 +1814,7 @@ def dedup_banding_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _banding_by_source_oracle() -> str:
-    mh = ",\n           ".join(
-        f"list_min(list_transform(dh, h -> ({a} * h + {b}) % {P})) AS mh{i}"
-        for i, (a, b) in enumerate(PERMS)
-    )
-    blocks = [f"""{_duck_docsets(mutated=True).lstrip()},
-sigs AS (
-    SELECT doc_id, dh,
-           {mh}
-    FROM docsets
-),
+    blocks = [f"""{_duck_sigs()},
 docls AS (
     SELECT doc_id AS base_a, lang, source FROM documents
 ),
@@ -1964,27 +1825,10 @@ planted AS (
     selects = []
     for nb in BAND_SWEEP:
         rpb = NUM_PERM // nb
-        bands = "\n    UNION ALL\n".join(
-            f"    SELECT doc_id, dh, {band} AS band_idx, "
-            + " || '_' || ".join(
-                f"CAST(mh{band * rpb + r} AS VARCHAR)"
-                for r in range(rpb))
-            + " AS bkey FROM sigs"
-            for band in range(nb)
-        )
-        blocks.append(f""", buckets{nb} AS (
-{bands}
-), cand{nb} AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.dh AS dha, b.dh AS dhb
-    FROM buckets{nb} a JOIN buckets{nb} b
-      ON a.band_idx = b.band_idx AND a.bkey = b.bkey
-     AND a.doc_id < b.doc_id
-), st{nb} AS (
+        blocks.append(f""", {_duck_band_ctes(nb, str(nb))}, st{nb} AS (
     SELECT d.lang AS lang, d.source AS source,
            CAST(COUNT(*) AS BIGINT) AS n_cand,
-           CAST(SUM(CASE WHEN len(list_intersect(dha, dhb)) * 1000000
-                    // (len(dha) + len(dhb) - len(list_intersect(dha, dhb)))
+           CAST(SUM(CASE WHEN {_duck_jacc_ppm('dha', 'dhb')}
                     >= {JACCARD_T_PPM} THEN 1 ELSE 0 END) AS BIGINT)
                AS n_confirmed,
            CAST(SUM(CASE WHEN doc_b - doc_a = {MUT_OFFSET}

@@ -446,11 +446,20 @@ def _bfs_hop_histogram(sym: DataFrame, dist: DataFrame) -> DataFrame:
     still-unreached count (hop = -1). The rounds are a documented cap,
     not a convergence loop; the oracle mirrors them CTE for CTE
     (``_bfs_rounds_sql``)."""
+    from ..operators.graph import _drop_checkpoint
+
+    prev = None
     for k in range(1, BFS_ROUNDS + 1):
         # each round reads dist twice (base + frontier) — truncate the
         # lineage per round or the plan re-evaluates the whole prefix
-        # 2^k times (the operators/graph.py CC discipline)
+        # 2^k times (the operators/graph.py CC discipline); once this
+        # round's checkpoint has materialised nothing reads the previous
+        # one, so its blocks go now (the returned histogram reads only
+        # the last checkpoint and ``sym``)
         dist = dist.localCheckpoint()
+        if prev is not None:
+            _drop_checkpoint(prev)
+        prev = dist
         frontier = dist.filter(F.col("d") == k - 1).select("u")
         nxt = (sym.join(frontier, "u")
                .select(F.col("v").alias("u")).distinct()

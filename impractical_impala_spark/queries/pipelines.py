@@ -155,6 +155,8 @@ def ann_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_pipeline_oracle() -> str:
+    from .dedup import _duck_components
+
     sig = _pipe_signature_terms(False)
     return f"""
 WITH RECURSIVE emb AS (
@@ -173,18 +175,8 @@ WITH RECURSIVE emb AS (
     WHERE list_dot_product(a.v, b.v)
           / (sqrt(list_dot_product(a.v, a.v))
              * sqrt(list_dot_product(b.v, b.v))) > {NEAR_DUP_COS}
-), nodes AS (
-    SELECT va AS node FROM pairs UNION SELECT vb FROM pairs
-), edges AS (
-    SELECT va AS a, vb AS b FROM pairs
-    UNION SELECT vb, va FROM pairs
-), reach(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-), removed AS (
-    SELECT node AS vec_id FROM reach GROUP BY node
-    HAVING node <> MIN(lbl)
+), {_duck_components("pairs", "va", "vb")}, removed AS (
+    SELECT node AS vec_id FROM comp WHERE node <> cluster_id
 ), corpus AS (
     SELECT vec_id, label FROM embeddings
     UNION ALL

@@ -136,6 +136,23 @@ def test_one_checkpoint_per_round(spark):
     assert spark_jobs(spark, lambda: coreness(g)) == 13
 
 
+def test_bfs_keeps_only_the_last_round_checkpoint(spark, sf_small):
+    """graph_bfs_hops checkpoints its distance frame every unrolled
+    round and drops each superseded round's blocks once the next one
+    has materialised. The built query then holds two persistent RDDs,
+    the cached symmetrized edges and the last round's checkpoint, not
+    one per round."""
+    from impractical_impala_spark.registry import all_queries
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    try:
+        all_queries()["graph_bfs_hops"].build(spark, sf_small).collect()
+        assert persistent().size() - before <= 2
+    finally:
+        spark.catalog.clearCache()
+
+
 # ----------------------------------------------- triangle operator
 def test_triangle_count_matches_bruteforce_on_known_graphs(spark):
     """Degree-oriented wedge join == itertools brute force, including a

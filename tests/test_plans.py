@@ -250,6 +250,24 @@ def test_gate_off_plans_have_no_pinned_broadcast(spark, sf_small, name,
                           plan)) >= 3
 
 
+def test_minhash_queries_share_one_signature_cache(spark, sf_small):
+    """The minhash queries read ONE cached signature relation
+    (``dedup._minhash_sigs``): two ``.cache()`` calls over the same
+    input with different projections are two cache entries, each held
+    for the whole session. Counts the session's cached relations, not
+    persistent RDDs: a returned checkpoint is a persistent RDD too, and
+    the ContextCleaner frees it at GC-dependent times."""
+    spark.catalog.clearCache()
+    try:
+        for name in ("dedup_minhash_lsh", "minhash_calibration",
+                     "dedup_banding_sweep"):
+            _Q[name].build(spark, sf_small).collect()
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.numCachedEntries() == 1
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_global_rank_has_no_data_funnel(spark, sf_small):
     """q_global_rank's big-table window must be keyed on the range id
     (range exchange + hash exchange on __range_id); the only
