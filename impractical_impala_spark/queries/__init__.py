@@ -54,6 +54,21 @@ CHANGED_THIS_ROUND: dict[str, int] = {
     "minhash_calibration": 16,
     "dedup_lsh_audit": 16,          # reads dedup_minhash_lsh's pairs
     "dedup_cross_source_matrix": 16,  # reads dedup_minhash_lsh's pairs
+    # One hyperplane-LSH layer (similarity._hp_sigs: one cached 12-bit
+    # signature per vector, bucket layouts sliced from it by one
+    # explode) and one recall@1 scorer (_exact_top1 + _recall_at_1);
+    # values unchanged:
+    "ann_lsh_bucketed": 16,       # one explode in place of a 3-way union
+    "dedup_embedding_lsh": 16,    # same, over its augmented frame
+    "ann_lsh_tables_sweep": 16,   # same, per table count
+    "ann_recall_audit": 16,       # reads ann_lsh_bucketed's answers
+    "ann_lsh_multiprobe": 16,     # probes hp (expression hash only)
+    "ann_lsh_grid": 16,           # probes the shared index (expression)
+    "ann_lsh_bits_sweep": 16,     # hp slices, shared scorer (expression)
+    "ann_ivf_nprobe_sweep": 16,   # shared scorer (expression hash only)
+    "ann_ivf_trained_sweep": 16,  # shared scorer (expression hash only)
+    "ann_ivf_pq_sweep": 16,       # shared scorer + ADC cosine helper
+    "ann_pq_m_sweep": 16,         # shared scorer + ADC cosine helper
 }
 
 from ..registry import registered_names  # noqa: E402

@@ -24,7 +24,7 @@ Design for oracle-exactness AND 100 TB scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..broadcast_gate import maybe_broadcast
@@ -81,6 +81,34 @@ _DUCK_HASHES = ("list_distinct(list_transform({s},"
                 " t -> CAST(('0x' || substr(md5(t), 1, 7)) AS BIGINT)))")
 
 
+def _spark_variants(words: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
+    """``(*extra, doc_id, words)`` of the augmented corpus: every 3rd
+    doc explodes into (base, mutated) row variants in place. One corpus
+    scan — a union of a second filtered scan would read the corpus
+    twice and double the map-task count of everything downstream (the
+    mutation reuses the already-split words, so no expression work
+    repeats either). ``extra`` columns ride along unchanged."""
+    variants = F.expr(
+        f"CASE WHEN doc_id % 3 = 0 THEN array("
+        f" named_struct('doc_id', doc_id, 'words', words),"
+        f" named_struct('doc_id', doc_id + {MUT_OFFSET},"
+        f"              'words', {_SPARK_MUT.format(w='words')}))"
+        f" ELSE array(named_struct('doc_id', doc_id, 'words', words))"
+        f" END")
+    return (words.select(*extra, F.explode(variants).alias("v"))
+            .select(*extra, "v.doc_id", "v.words"))
+
+
+def _duck_variants(extra: str = "") -> str:
+    """DuckDB twin of ``_spark_variants``; ``extra`` is a SELECT-list
+    prefix (``"lang, source, "``)."""
+    return f"""SELECT doc_id, {extra}{_DUCK_WORDS} AS words FROM documents
+        UNION ALL
+        SELECT doc_id + {MUT_OFFSET} AS doc_id, {extra}
+               {_DUCK_MUT.format(w=_DUCK_WORDS)} AS words
+        FROM documents WHERE doc_id % 3 = 0"""
+
+
 def _spark_docsets(spark: SparkSession, sf_dir: str, mutated: bool) -> DataFrame:
     """documents (+ mutated copies of every 3rd doc) with the distinct
     bigram-shingle hash set column ``dh``.
@@ -94,23 +122,7 @@ def _spark_docsets(spark: SparkSession, sf_dir: str, mutated: bool) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text") \
         .repartition(n)
     base = docs.withColumn("words", F.expr(_SPARK_WORDS))
-    if mutated:
-        # one corpus scan: every 3rd doc explodes into (base, mutated)
-        # row variants in place — a union of a second filtered scan
-        # would read the corpus twice and double the map-task count of
-        # everything downstream (the mutation reuses the already-split
-        # words, so no expression work repeats either)
-        variants = F.expr(
-            f"CASE WHEN doc_id % 3 = 0 THEN array("
-            f" named_struct('doc_id', doc_id, 'words', words),"
-            f" named_struct('doc_id', doc_id + {MUT_OFFSET},"
-            f"              'words', {_SPARK_MUT.format(w='words')}))"
-            f" ELSE array(named_struct('doc_id', doc_id, 'words', words))"
-            f" END")
-        out = (base.select(F.explode(variants).alias("v"))
-               .select("v.doc_id", "v.words"))
-    else:
-        out = base
+    out = _spark_variants(base) if mutated else base
     return (
         out.withColumn("sh", F.expr(_SPARK_SHINGLES.format(w="words")))
         .withColumn("dh", F.expr(_SPARK_HASHES.format(s="sh")))
@@ -119,16 +131,13 @@ def _spark_docsets(spark: SparkSession, sf_dir: str, mutated: bool) -> DataFrame
 
 
 def _duck_docsets(mutated: bool) -> str:
-    mut_block = f"""
-    UNION ALL
-    SELECT doc_id + {MUT_OFFSET} AS doc_id,
-           {_DUCK_MUT.format(w=_DUCK_WORDS)} AS words
-    FROM documents WHERE doc_id % 3 = 0""" if mutated else ""
+    words = (_duck_variants() if mutated
+             else f"SELECT doc_id, {_DUCK_WORDS} AS words FROM documents")
     return f"""
 docsets AS (
     SELECT doc_id, {_DUCK_HASHES.format(s=_DUCK_SHINGLES.format(w='words'))} AS dh
     FROM (
-        SELECT doc_id, {_DUCK_WORDS} AS words FROM documents{mut_block}
+        {words}
     )
 )"""
 
@@ -241,16 +250,29 @@ def _duck_jacc_ppm(a: str, b: str) -> str:
             f" // (CAST(len({a}) AS BIGINT) + len({b}) - {inter})")
 
 
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of the hash sets ``a``, ``b`` as a double
+    (inter / union)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return inter.cast("double") / union.cast("double")
+
+
+def _duck_jaccard(a: str, b: str) -> str:
+    """DuckDB twin of ``_jaccard``."""
+    inter = f"len(list_intersect({a}, {b}))"
+    return (f"CAST({inter} AS DOUBLE)"
+            f" / CAST(len({a}) + len({b}) - {inter} AS DOUBLE)")
+
+
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16 perms) -> LSH(4 bands x 4 rows) -> band-bucket join ->
     exact-Jaccard confirmation (see ``_band_pairs``)."""
     sigs = _minhash_sigs(spark, sf_dir)
     pairs = _attach_sides(_band_pairs(sigs, BANDS, sf_dir), sigs, ["dh"],
                           sf_dir)
-    inter = F.size(F.array_intersect("dha", "dhb"))
-    union = F.size("dha") + F.size("dhb") - inter
     return (
-        pairs.withColumn("jaccard", inter.cast("double") / union.cast("double"))
+        pairs.withColumn("jaccard", _jaccard("dha", "dhb"))
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -303,14 +325,8 @@ def _duck_minhash_ctes() -> str:
     return f"""{_duck_sigs()},
 {_duck_band_ctes(BANDS)},
 lsh_pairs AS (
-    SELECT doc_a, doc_b,
-           CAST(len(list_intersect(dha, dhb)) AS DOUBLE)
-           / CAST(len(dha) + len(dhb) - len(list_intersect(dha, dhb))
-                  AS DOUBLE) AS jaccard
-    FROM cand
-    WHERE CAST(len(list_intersect(dha, dhb)) AS DOUBLE)
-          / CAST(len(dha) + len(dhb) - len(list_intersect(dha, dhb))
-                 AS DOUBLE) >= {JACCARD_T}
+    SELECT doc_a, doc_b, {_duck_jaccard('dha', 'dhb')} AS jaccard
+    FROM cand WHERE {_duck_jaccard('dha', 'dhb')} >= {JACCARD_T}
 )"""
 
 
@@ -357,11 +373,11 @@ def _duck_simhash_terms(col: str = "dh") -> str:
     )
 
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked exact n-gram Jaccard: compare pairs that share the
-    bounded-cardinality blocking key (lang, source, len_band, simhash
-    prefix — see NGRAM_PREFIX_BITS above). The ground-truth companion
-    to the LSH query: within a block the Jaccard is exact."""
+def _blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The blocked exact-Jaccard pair join over the augmented corpus:
+    docs sharing the bounded-cardinality blocking key (lang, source,
+    len_band, simhash prefix — see NGRAM_PREFIX_BITS above), ``a.doc_id
+    < b.doc_id``; callers select from the ``a`` / ``b`` sides."""
     ds = _spark_docsets(spark, sf_dir, mutated=True)
     meta = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     meta = meta.unionByName(
@@ -385,7 +401,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     a, b = ds.alias("a"), ds.alias("b")
-    pairs = a.join(
+    return a.join(
         _maybe_broadcast(b, sf_dir),
         (F.col("a.lang") == F.col("b.lang"))
         & (F.col("a.source") == F.col("b.source"))
@@ -393,12 +409,41 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("a.blk") == F.col("b.blk"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
     )
-    inter = F.size(F.array_intersect(F.col("a.dh"), F.col("b.dh")))
-    union = F.size(F.col("a.dh")) + F.size(F.col("b.dh")) - inter
+
+
+def _duck_blocked_ctes() -> str:
+    """DuckDB twin of ``_blocked_pairs`` over the ``docsets`` CTE: the
+    ``meta``, ``dsb`` and ``blocked(doc_a, doc_b, dha, dhb)`` CTEs."""
+    return f"""meta AS (
+    SELECT doc_id, lang, source FROM documents
+    UNION ALL
+    SELECT doc_id + {MUT_OFFSET}, lang, source FROM documents
+    WHERE doc_id % 3 = 0
+),
+dsb AS (
+    SELECT d.doc_id, d.dh, m.lang, m.source,
+           CAST(floor(log2(len(d.dh))) AS BIGINT) AS len_band,
+           ({_duck_simhash_terms('d.dh')})
+               >> {SIMHASH_BITS - NGRAM_PREFIX_BITS} AS blk
+    FROM docsets d JOIN meta m USING (doc_id)
+),
+blocked AS (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.dh AS dha, b.dh AS dhb
+    FROM dsb a JOIN dsb b
+      ON a.lang = b.lang AND a.source = b.source
+     AND a.len_band = b.len_band AND a.blk = b.blk AND a.doc_id < b.doc_id
+)"""
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked exact n-gram Jaccard: compare pairs that share the
+    bounded-cardinality blocking key (``_blocked_pairs``). The
+    ground-truth companion to the LSH query: within a block the
+    Jaccard is exact."""
     return (
-        pairs.select(
+        _blocked_pairs(spark, sf_dir).select(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+            _jaccard("a.dh", "b.dh").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= JACCARD_T)
     )
@@ -406,28 +451,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register("dedup_ngram_jaccard", dedup_ngram_jaccard, f"""
 WITH {_duck_docsets(mutated=True).lstrip()},
-meta AS (
-    SELECT doc_id, lang, source FROM documents
-    UNION ALL
-    SELECT doc_id + {MUT_OFFSET}, lang, source FROM documents WHERE doc_id % 3 = 0
-),
-ds AS (
-    SELECT d.doc_id, d.dh, m.lang, m.source,
-           CAST(floor(log2(len(d.dh))) AS BIGINT) AS len_band,
-           ({_duck_simhash_terms('d.dh')})
-               >> {SIMHASH_BITS - NGRAM_PREFIX_BITS} AS blk
-    FROM docsets d JOIN meta m USING (doc_id)
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(len(list_intersect(a.dh, b.dh)) AS DOUBLE)
-       / CAST(len(a.dh) + len(b.dh) - len(list_intersect(a.dh, b.dh)) AS DOUBLE)
-           AS jaccard
-FROM ds a JOIN ds b
-  ON a.lang = b.lang AND a.source = b.source
- AND a.len_band = b.len_band AND a.blk = b.blk AND a.doc_id < b.doc_id
-WHERE CAST(len(list_intersect(a.dh, b.dh)) AS DOUBLE)
-      / CAST(len(a.dh) + len(b.dh) - len(list_intersect(a.dh, b.dh)) AS DOUBLE)
-      >= {JACCARD_T}
+{_duck_blocked_ctes()}
+SELECT doc_a, doc_b, {_duck_jaccard('dha', 'dhb')} AS jaccard
+FROM blocked WHERE {_duck_jaccard('dha', 'dhb')} >= {JACCARD_T}
 """, "blocked exact n-gram jaccard near-dup pairs")
 
 
@@ -730,66 +756,27 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-bucket-in-some-table only, deduped as (id, id) before the
     vectors are re-fetched through a size-gated broadcast. One
     bucket-key shuffle + one id join — no corpus^2 stage anywhere."""
-    from .similarity import BITS_PER_TABLE, N_TABLES, _planes
+    from .similarity import (TABLES, _bucket_pairs, _hp_expr, _hp_index,
+                             _with_cos)
 
-    emb = _spark_emb_aug(spark, sf_dir)
-    planes = _planes()
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            proj = vecfold.fold_dot_const("v", plane)
-            terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << r} ELSE 0 END)")
-        emb = emb.withColumn(f"bucket{t}", F.expr(" + ".join(terms)).cast("bigint"))
-    emb = emb.cache()
-    tables = None
-    for t in range(N_TABLES):
-        part = emb.select("vec_id", F.lit(t).alias("tbl"),
-                          F.col(f"bucket{t}").alias("bucket"))
-        tables = part if tables is None else tables.unionByName(part)
-    a, b = tables.alias("a"), tables.alias("b")
-    cand = (
-        a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_id"),
-                F.col("b.vec_id").alias("neighbor_id"))
-        .dropDuplicates(["vec_id", "neighbor_id"])
-    )
-    va = emb.select(F.col("vec_id").alias("vec_id"), F.col("v").alias("va"),
-                    F.col("norm").alias("na"))
-    vb = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb"),
-                    F.col("norm").alias("nb"))
-    cand = cand.join(maybe_broadcast(va, sf_dir, "embeddings"), "vec_id") \
-               .join(maybe_broadcast(vb, sf_dir, "embeddings"), "neighbor_id")
+    # scaled and jittered copies can flip signs: the copies get their
+    # own signatures, so this frame does not read the session's _hp_sigs
+    emb = _spark_emb_aug(spark, sf_dir).withColumn(
+        "hp", F.expr(_hp_expr("v"))).cache()
+    cand = _bucket_pairs(_hp_index(emb, TABLES), "<")
     # candidate volume here is bucket-local (measured regression with
-    # the unroll — vecfold.fold_dot docstring): the fold stays
-    dot = F.expr(vecfold.fold_dot("va", "vb"))
+    # the unroll — vecfold.fold_dot docstring): _with_cos's fold stays
     return (
-        cand.select("vec_id", "neighbor_id",
-                    (dot / (F.col("na") * F.col("nb"))).alias("cos"))
+        _with_cos(cand, emb, sf_dir)
         .filter(F.col("cos") >= COS_T)
         .select("vec_id", "neighbor_id", F.round("cos", 6).alias("cos"))
     )
 
 
 def _emb_lsh_oracle() -> str:
-    from .similarity import BITS_PER_TABLE, N_TABLES, _planes
+    from .similarity import (TABLES, _duck_bucket_pairs, _duck_hp,
+                             _duck_hp_index, _duck_with_cos)
 
-    planes = _planes()
-    buckets = []
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-            terms.append(f"(CASE WHEN list_dot_product(v, {arr}) > 0"
-                         f" THEN {1 << r} ELSE 0 END)")
-        buckets.append(" + ".join(terms))
-    bucket_union = "\n    UNION ALL\n".join(
-        f"    SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sigs"
-        for t in range(N_TABLES)
-    )
     return f"""
 WITH base AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -802,26 +789,14 @@ WITH base AS (
     UNION ALL
     SELECT vec_id + {EMB_JIT_OFFSET}, list_transform(v, x -> x * 0.9 + 0.02)
     FROM base WHERE vec_id % 7 = 0
-), sigs AS (
-    SELECT vec_id, v,
-           {buckets[0]} AS b0,
-           {buckets[1]} AS b1,
-           {buckets[2]} AS b2
-    FROM aug
+), sig AS (
+    SELECT vec_id, v, {_duck_hp('v')} AS hp FROM aug
 ), buckets AS (
-{bucket_union}
+    {_duck_hp_index('sig', TABLES)}
 ), cand AS (
-    SELECT DISTINCT a.vec_id AS vec_id, b.vec_id AS neighbor_id
-    FROM buckets a JOIN buckets b
-      ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+    {_duck_bucket_pairs('buckets', '<')}
 ), scored AS (
-    SELECT c.vec_id, c.neighbor_id,
-           list_dot_product(x.v, y.v)
-           / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
-    FROM cand c
-    JOIN sigs x ON c.vec_id = x.vec_id
-    JOIN sigs y ON c.neighbor_id = y.vec_id
+    {_duck_with_cos('cand')}
 )
 SELECT vec_id, neighbor_id, ROUND(cos, 6) AS cos
 FROM scored WHERE cos >= {COS_T}
@@ -968,27 +943,10 @@ def dedup_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register("dedup_lsh_audit", dedup_lsh_audit, f"""
 WITH {_duck_minhash_ctes()},
-meta AS (
-    SELECT doc_id, lang, source FROM documents
-    UNION ALL
-    SELECT doc_id + {MUT_OFFSET}, lang, source FROM documents
-    WHERE doc_id % 3 = 0
-),
-dsb AS (
-    SELECT d.doc_id, d.dh, m.lang, m.source,
-           CAST(floor(log2(len(d.dh))) AS BIGINT) AS len_band,
-           ({_duck_simhash_terms('d.dh')})
-               >> {SIMHASH_BITS - NGRAM_PREFIX_BITS} AS blk
-    FROM docsets d JOIN meta m USING (doc_id)
-),
+{_duck_blocked_ctes()},
 truth_pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM dsb a JOIN dsb b
-      ON a.lang = b.lang AND a.source = b.source
-     AND a.len_band = b.len_band AND a.blk = b.blk AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.dh, b.dh)) AS DOUBLE)
-          / CAST(len(a.dh) + len(b.dh) - len(list_intersect(a.dh, b.dh))
-                 AS DOUBLE) >= {JACCARD_T}
+    SELECT doc_a, doc_b FROM blocked
+    WHERE {_duck_jaccard('dha', 'dhb')} >= {JACCARD_T}
 ),
 j AS (
     SELECT COALESCE(l.flag, 0) AS in_lsh, COALESCE(t.flag, 0) AS in_truth
@@ -1126,31 +1084,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     every threshold compare is integer. The sweep explodes thresholds
     over the BLOCKED pair frame only; affected-doc counts stack both
     pair sides and count distinct per threshold."""
-    ds = _spark_docsets(spark, sf_dir, mutated=True)
-    meta = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source")
-    meta = meta.unionByName(
-        meta.filter(F.col("doc_id") % 3 == 0)
-        .withColumn("doc_id", F.col("doc_id") + F.lit(MUT_OFFSET)))
-    ds = (ds.join(meta, "doc_id")
-          .withColumn("len_band",
-                      F.expr("cast(floor(log2(size(dh))) as bigint)"))
-          .withColumn("blk", F.expr(
-              f"({_spark_simhash_terms('dh')})"
-              f" >> {SIMHASH_BITS - NGRAM_PREFIX_BITS}"))
-          .cache())
-    a, b = ds.alias("a"), ds.alias("b")
-    pairs = (a.join(
-        _maybe_broadcast(b, sf_dir),
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.source") == F.col("b.source"))
-        & (F.col("a.len_band") == F.col("b.len_band"))
-        & (F.col("a.blk") == F.col("b.blk"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr(_jacc_ppm("a.dh", "b.dh")).alias("jacc_ppm")))
+    pairs = _blocked_pairs(spark, sf_dir).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.expr(_jacc_ppm("a.dh", "b.dh")).alias("jacc_ppm"))
     ts = ", ".join(str(t) for t in SWEEP_T_PPM)
     fan = (pairs.withColumn("t_ppm", F.explode(F.expr(f"array({ts})")))
            .filter(F.col("jacc_ppm") >= F.col("t_ppm")))
@@ -1175,26 +1112,10 @@ def _sweep_oracle() -> str:
     ts = ", ".join(str(t) for t in SWEEP_T_PPM)
     return f"""
 WITH {_duck_docsets(mutated=True).lstrip()},
-meta AS (
-    SELECT doc_id, lang, source FROM documents
-    UNION ALL
-    SELECT doc_id + {MUT_OFFSET}, lang, source FROM documents
-    WHERE doc_id % 3 = 0
-),
-ds AS (
-    SELECT d.doc_id, d.dh, m.lang, m.source,
-           CAST(floor(log2(len(d.dh))) AS BIGINT) AS len_band,
-           ({_duck_simhash_terms('d.dh')})
-               >> {SIMHASH_BITS - NGRAM_PREFIX_BITS} AS blk
-    FROM docsets d JOIN meta m USING (doc_id)
-),
+{_duck_blocked_ctes()},
 pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           {_duck_jacc_ppm('a.dh', 'b.dh')} AS jacc_ppm
-    FROM ds a JOIN ds b
-      ON a.lang = b.lang AND a.source = b.source
-     AND a.len_band = b.len_band AND a.blk = b.blk
-     AND a.doc_id < b.doc_id
+    SELECT doc_a, doc_b, {_duck_jacc_ppm('dha', 'dhb')} AS jacc_ppm
+    FROM blocked
 ),
 fan AS (
     SELECT p.*, t.t_ppm
@@ -1446,6 +1367,88 @@ def _duck_shingles_k(k: int) -> str:
             f"list_slice(words, i, i + {k - 1}), ' '))")
 
 
+def _shingle_sums(spark: SparkSession, sf_dir: str,
+                  extra: tuple[str, ...] = ()) -> tuple[DataFrame, DataFrame]:
+    """The shingle sweeps' planted and neighbor panel sums per
+    ``extra`` group: ``pl(*extra, n_planted, pj{k}, pr{k})`` and
+    ``nb(*extra, n_neighbor, nj{k})``. ONE corpus scan computes the
+    words column and all |SHINGLE_SWEEP| distinct-shingle-hash sets
+    side by side; both panels attach by equality joins on doc_id
+    arithmetic (planted: id + MUT_OFFSET; neighbor: id + 1) — never a
+    pair-space join."""
+    n = spark.sparkContext.defaultParallelism
+    docs = (load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text", *extra)
+            .repartition(n)
+            .withColumn("words", F.expr(_SPARK_WORDS)))
+    sets = (_spark_variants(docs, extra)
+            .select("doc_id", *extra, *[
+                F.expr(_SPARK_HASHES.format(s=_spark_shingles_k(k)))
+                .alias(f"dh{k}") for k in SHINGLE_SWEEP])
+            .cache())
+
+    def panel(offset: int, pred: str) -> DataFrame:
+        a = sets.select(F.col("doc_id").alias("a_id"), *extra, *[
+            F.col(f"dh{k}").alias(f"a_dh{k}") for k in SHINGLE_SWEEP])
+        b = sets.select((F.col("doc_id") - offset).alias("a_id"), *[
+            F.col(f"dh{k}").alias(f"b_dh{k}") for k in SHINGLE_SWEEP])
+        return (a.filter(F.expr(pred)).join(b, "a_id")
+                .select(*extra, *[
+                    F.expr(_jacc_ppm(f"a_dh{k}", f"b_dh{k}"))
+                    .alias(f"j{k}") for k in SHINGLE_SWEEP]))
+
+    planted = panel(MUT_OFFSET, "a_id % 3 = 0 AND a_id < 1000000")
+    # unrelated baseline: consecutive BASE doc ids (both < MUT_OFFSET)
+    neighbor = panel(1, "a_id % 3 != 2 AND a_id < 1000000")
+    pl = planted.groupBy(*extra).agg(
+        F.count(F.lit(1)).alias("n_planted"),
+        *[F.sum(f"j{k}").alias(f"pj{k}") for k in SHINGLE_SWEEP],
+        *[F.sum(F.expr(f"cast(j{k} >= {JACCARD_T_PPM} as long)"))
+          .alias(f"pr{k}") for k in SHINGLE_SWEEP])
+    nb = neighbor.groupBy(*extra).agg(
+        F.count(F.lit(1)).alias("n_neighbor"),
+        *[F.sum(f"j{k}").alias(f"nj{k}") for k in SHINGLE_SWEEP])
+    return pl, nb
+
+
+def _duck_shingle_ctes(extra: tuple[str, ...] = ()) -> str:
+    """DuckDB twin of ``_shingle_sums``: the ``sets``, ``pl`` and
+    ``nb`` CTEs."""
+    dh_cols = ",\n           ".join(
+        f"{_DUCK_HASHES.format(s=_duck_shingles_k(k))} AS dh{k}"
+        for k in SHINGLE_SWEEP)
+
+    def jacc(k: int) -> str:
+        return _duck_jacc_ppm(f"a.dh{k}", f"b.dh{k}")
+
+    pj = ", ".join(
+        f"CAST(SUM({jacc(k)}) AS BIGINT) AS pj{k},"
+        f" CAST(SUM(CASE WHEN {jacc(k)} >= {JACCARD_T_PPM} THEN 1 ELSE 0 END)"
+        f" AS BIGINT) AS pr{k}"
+        for k in SHINGLE_SWEEP)
+    nj = ", ".join(
+        f"CAST(SUM({jacc(k)}) AS BIGINT) AS nj{k}" for k in SHINGLE_SWEEP)
+    cols = "".join(f"{c}, " for c in extra)
+    keys = "".join(f"a.{c} AS {c}, " for c in extra)
+    group = (f"\n    GROUP BY {', '.join(str(i + 1) for i in range(len(extra)))}"
+             if extra else "")
+    return f"""sets AS (
+    SELECT doc_id, {cols}
+           {dh_cols}
+    FROM (
+        {_duck_variants(cols)}
+    )
+), pl AS (
+    SELECT {keys}CAST(COUNT(*) AS BIGINT) AS n_planted, {pj}
+    FROM sets a JOIN sets b ON b.doc_id = a.doc_id + {MUT_OFFSET}
+    WHERE a.doc_id % 3 = 0 AND a.doc_id < 1000000{group}
+), nb AS (
+    SELECT {keys}CAST(COUNT(*) AS BIGINT) AS n_neighbor, {nj}
+    FROM sets a JOIN sets b ON b.doc_id = a.doc_id + 1
+    WHERE a.doc_id % 3 != 2 AND a.doc_id < 1000000{group}
+)"""
+
+
 def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard-vs-shingle-size tuning curve: per k in SHINGLE_SWEEP,
     the planted near-dup panel's mean exact Jaccard (integer ppm,
@@ -1456,49 +1459,10 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k too small: neighbors collide; k too large: real near-dups fall
     under the threshold).
 
-    Scale shape: ONE corpus scan computes the words column and all
-    |SHINGLE_SWEEP| distinct-shingle-hash sets side by side; both pair
-    panels attach by equality joins on doc_id arithmetic (planted:
-    id + MUT_OFFSET; neighbor: id + 1) — never a pair-space join; the
-    output is |SHINGLE_SWEEP| rows from one global aggregate."""
-    n = spark.sparkContext.defaultParallelism
-    docs = (load_table(spark, sf_dir, "documents").select("doc_id", "text")
-            .repartition(n)
-            .withColumn("words", F.expr(_SPARK_WORDS)))
-    variants = F.expr(
-        f"CASE WHEN doc_id % 3 = 0 THEN array("
-        f" named_struct('doc_id', doc_id, 'words', words),"
-        f" named_struct('doc_id', doc_id + {MUT_OFFSET},"
-        f"              'words', {_SPARK_MUT.format(w='words')}))"
-        f" ELSE array(named_struct('doc_id', doc_id, 'words', words))"
-        f" END")
-    sets = (docs.select(F.explode(variants).alias("v"))
-            .select("v.doc_id", "v.words")
-            .select("doc_id", *[
-                F.expr(_SPARK_HASHES.format(s=_spark_shingles_k(k)))
-                .alias(f"dh{k}") for k in SHINGLE_SWEEP])
-            .cache())
-
-    def panel(offset: int, pred: str) -> DataFrame:
-        a = sets.select(F.col("doc_id").alias("a_id"), *[
-            F.col(f"dh{k}").alias(f"a_dh{k}") for k in SHINGLE_SWEEP])
-        b = sets.select((F.col("doc_id") - offset).alias("a_id"), *[
-            F.col(f"dh{k}").alias(f"b_dh{k}") for k in SHINGLE_SWEEP])
-        return (a.filter(F.expr(pred)).join(b, "a_id")
-                .select(*[F.expr(_jacc_ppm(f"a_dh{k}", f"b_dh{k}"))
-                          .alias(f"j{k}") for k in SHINGLE_SWEEP]))
-
-    planted = panel(MUT_OFFSET, "a_id % 3 = 0 AND a_id < 1000000")
-    # unrelated baseline: consecutive BASE doc ids (both < MUT_OFFSET)
-    neighbor = panel(1, "a_id % 3 != 2 AND a_id < 1000000")
-    pl = planted.agg(
-        F.count(F.lit(1)).alias("n_planted"),
-        *[F.sum(f"j{k}").alias(f"pj{k}") for k in SHINGLE_SWEEP],
-        *[F.sum(F.expr(f"cast(j{k} >= {JACCARD_T_PPM} as long)"))
-          .alias(f"pr{k}") for k in SHINGLE_SWEEP])
-    nb = neighbor.agg(
-        F.count(F.lit(1)).alias("n_neighbor"),
-        *[F.sum(f"j{k}").alias(f"nj{k}") for k in SHINGLE_SWEEP])
+    Scale shape: ``_shingle_sums`` (one corpus scan, doc_id-arithmetic
+    panel joins); the output is |SHINGLE_SWEEP| rows from one global
+    aggregate."""
+    pl, nb = _shingle_sums(spark, sf_dir)
     both = pl.crossJoin(F.broadcast(nb))
     stacked = ", ".join(
         f"{k}L, pj{k}, pr{k}, nj{k}" for k in SHINGLE_SWEEP)
@@ -1518,43 +1482,11 @@ def dedup_shingle_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_sweep_oracle() -> str:
-    dh_cols = ",\n           ".join(
-        f"{_DUCK_HASHES.format(s=_duck_shingles_k(k))} AS dh{k}"
-        for k in SHINGLE_SWEEP)
-
-    def jacc(k: int) -> str:
-        return _duck_jacc_ppm(f"a.dh{k}", f"b.dh{k}")
-
-    pj = ", ".join(
-        f"CAST(SUM({jacc(k)}) AS BIGINT) AS pj{k},"
-        f" CAST(SUM(CASE WHEN {jacc(k)} >= {JACCARD_T_PPM} THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS pr{k}"
-        for k in SHINGLE_SWEEP)
-    nj = ", ".join(
-        f"CAST(SUM({jacc(k)}) AS BIGINT) AS nj{k}" for k in SHINGLE_SWEEP)
     rows = "\n    UNION ALL\n    ".join(
         f"SELECT {k} AS k, pj{k} AS pj, pr{k} AS pr, nj{k} AS nj"
         f" FROM pl CROSS JOIN nb" for k in SHINGLE_SWEEP)
     return f"""
-WITH sets AS (
-    SELECT doc_id,
-           {dh_cols}
-    FROM (
-        SELECT doc_id, {_DUCK_WORDS} AS words FROM documents
-        UNION ALL
-        SELECT doc_id + {MUT_OFFSET} AS doc_id,
-               {_DUCK_MUT.format(w=_DUCK_WORDS)} AS words
-        FROM documents WHERE doc_id % 3 = 0
-    )
-), pl AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_planted, {pj}
-    FROM sets a JOIN sets b ON b.doc_id = a.doc_id + {MUT_OFFSET}
-    WHERE a.doc_id % 3 = 0 AND a.doc_id < 1000000
-), nb AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_neighbor, {nj}
-    FROM sets a JOIN sets b ON b.doc_id = a.doc_id + 1
-    WHERE a.doc_id % 3 != 2 AND a.doc_id < 1000000
-)
+WITH {_duck_shingle_ctes()}
 SELECT CAST(k AS INT) AS k,
        (SELECT n_planted FROM pl) AS n_planted,
        (SELECT n_neighbor FROM nb) AS n_neighbor,
@@ -1591,50 +1523,10 @@ def dedup_shingle_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (guarded division — DuckDB raises on integer //0 where Spark
     NULLs).
 
-    Scale shape: identical to the global sweep — ONE corpus scan
-    computes all |SHINGLE_SWEEP| shingle-hash sets; panels attach by
-    doc_id-arithmetic equality joins (never pair-space); the only
-    addition is that the final aggregate keys on the model-size
+    Scale shape: identical to the global sweep (``_shingle_sums``); the
+    only addition is that the final aggregate keys on the model-size
     (lang, source) domain instead of collapsing to one row."""
-    n = spark.sparkContext.defaultParallelism
-    docs = (load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text", "lang", "source")
-            .repartition(n)
-            .withColumn("words", F.expr(_SPARK_WORDS)))
-    variants = F.expr(
-        f"CASE WHEN doc_id % 3 = 0 THEN array("
-        f" named_struct('doc_id', doc_id, 'words', words),"
-        f" named_struct('doc_id', doc_id + {MUT_OFFSET},"
-        f"              'words', {_SPARK_MUT.format(w='words')}))"
-        f" ELSE array(named_struct('doc_id', doc_id, 'words', words))"
-        f" END")
-    sets = (docs.select("lang", "source", F.explode(variants).alias("v"))
-            .select("lang", "source", "v.doc_id", "v.words")
-            .select("doc_id", "lang", "source", *[
-                F.expr(_SPARK_HASHES.format(s=_spark_shingles_k(k)))
-                .alias(f"dh{k}") for k in SHINGLE_SWEEP])
-            .cache())
-
-    def panel(offset: int, pred: str) -> DataFrame:
-        a = sets.select(F.col("doc_id").alias("a_id"), "lang", "source", *[
-            F.col(f"dh{k}").alias(f"a_dh{k}") for k in SHINGLE_SWEEP])
-        b = sets.select((F.col("doc_id") - offset).alias("a_id"), *[
-            F.col(f"dh{k}").alias(f"b_dh{k}") for k in SHINGLE_SWEEP])
-        return (a.filter(F.expr(pred)).join(b, "a_id")
-                .select("lang", "source", *[
-                    F.expr(_jacc_ppm(f"a_dh{k}", f"b_dh{k}"))
-                    .alias(f"j{k}") for k in SHINGLE_SWEEP]))
-
-    planted = panel(MUT_OFFSET, "a_id % 3 = 0 AND a_id < 1000000")
-    neighbor = panel(1, "a_id % 3 != 2 AND a_id < 1000000")
-    pl = planted.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_planted"),
-        *[F.sum(f"j{k}").alias(f"pj{k}") for k in SHINGLE_SWEEP],
-        *[F.sum(F.expr(f"cast(j{k} >= {JACCARD_T_PPM} as long)"))
-          .alias(f"pr{k}") for k in SHINGLE_SWEEP])
-    nb = neighbor.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_neighbor"),
-        *[F.sum(f"j{k}").alias(f"nj{k}") for k in SHINGLE_SWEEP])
+    pl, nb = _shingle_sums(spark, sf_dir, ("lang", "source"))
     both = (pl.join(nb, ["lang", "source"], "full")
             .select("lang", "source",
                     F.expr("coalesce(n_planted, 0)").alias("n_planted"),
@@ -1667,20 +1559,6 @@ def dedup_shingle_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_by_source_oracle() -> str:
-    dh_cols = ",\n           ".join(
-        f"{_DUCK_HASHES.format(s=_duck_shingles_k(k))} AS dh{k}"
-        for k in SHINGLE_SWEEP)
-
-    def jacc(k: int) -> str:
-        return _duck_jacc_ppm(f"a.dh{k}", f"b.dh{k}")
-
-    pj = ", ".join(
-        f"CAST(SUM({jacc(k)}) AS BIGINT) AS pj{k},"
-        f" CAST(SUM(CASE WHEN {jacc(k)} >= {JACCARD_T_PPM} THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS pr{k}"
-        for k in SHINGLE_SWEEP)
-    nj = ", ".join(
-        f"CAST(SUM({jacc(k)}) AS BIGINT) AS nj{k}" for k in SHINGLE_SWEEP)
     coal = ", ".join(
         f"COALESCE({c}{k}, 0) AS {c}{k}"
         for k in SHINGLE_SWEEP for c in ("pj", "pr", "nj"))
@@ -1689,30 +1567,7 @@ def _shingle_by_source_oracle() -> str:
         f" pj{k} AS pj, pr{k} AS pr, nj{k} AS nj FROM sl"
         for k in SHINGLE_SWEEP)
     return f"""
-WITH sets AS (
-    SELECT doc_id, lang, source,
-           {dh_cols}
-    FROM (
-        SELECT doc_id, lang, source, {_DUCK_WORDS} AS words
-        FROM documents
-        UNION ALL
-        SELECT doc_id + {MUT_OFFSET} AS doc_id, lang, source,
-               {_DUCK_MUT.format(w=_DUCK_WORDS)} AS words
-        FROM documents WHERE doc_id % 3 = 0
-    )
-), pl AS (
-    SELECT a.lang AS lang, a.source AS source,
-           CAST(COUNT(*) AS BIGINT) AS n_planted, {pj}
-    FROM sets a JOIN sets b ON b.doc_id = a.doc_id + {MUT_OFFSET}
-    WHERE a.doc_id % 3 = 0 AND a.doc_id < 1000000
-    GROUP BY 1, 2
-), nb AS (
-    SELECT a.lang AS lang, a.source AS source,
-           CAST(COUNT(*) AS BIGINT) AS n_neighbor, {nj}
-    FROM sets a JOIN sets b ON b.doc_id = a.doc_id + 1
-    WHERE a.doc_id % 3 != 2 AND a.doc_id < 1000000
-    GROUP BY 1, 2
-), sl AS (
+WITH {_duck_shingle_ctes(("lang", "source"))}, sl AS (
     SELECT lang, source,
            COALESCE(n_planted, 0) AS n_planted,
            COALESCE(n_neighbor, 0) AS n_neighbor,

@@ -70,27 +70,7 @@ ORDER BY o_orderpriority, o_orderstatus
 COPY_OFFSET = 10_000_000
 COPY_MOD = 4          # every 4th vector gets an exact duplicate
 NEAR_DUP_COS = 0.9    # organic max pairwise cos is ~0.51 at sf0.01/0.1
-PIPE_BITS = 4         # single 4-bit hyperplane table for candidates
-
-
-def _pipe_signature_terms(spark_dialect: bool) -> str:
-    """4-bit hyperplane signature over the shared deterministic planes
-    (similarity._plane_sign planes 0-3) in either SQL dialect."""
-    from .similarity import DIM, _plane_sign
-
-    from ..functions import vecfold
-
-    terms = []
-    for p in range(PIPE_BITS):
-        plane = [_plane_sign(p, j) for j in range(DIM)]
-        if spark_dialect:
-            # row-scale signature: the fold stays (vecfold.fold_dot)
-            proj = vecfold.fold_dot_const("v", plane)
-        else:
-            arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-            proj = f"list_dot_product(v, {arr})"
-        terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END)")
-    return " + ".join(terms)
+PIPE_TABLE = ((4, 0),)  # single 4-bit hyperplane table (hp & 15)
 
 
 def ann_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,31 +80,21 @@ def ann_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates; the id-only pair frame is what shuffles into the
     component rounds."""
     from ..broadcast_gate import maybe_broadcast
+    from ..functions import vecfold
     from ..operators.graph import connected_components
-    from .similarity import _emb
+    from .similarity import DIM, _bucket_pairs, _hp_index, _hp_sigs
 
-    emb = _emb(spark, sf_dir)
-    emb = emb.unionByName(
-        emb.filter(F.col("vec_id") % COPY_MOD == 0)
-        .withColumn("vec_id", F.col("vec_id") + F.lit(COPY_OFFSET))
-    ).withColumn(
-        "bucket", F.expr(_pipe_signature_terms(True)).cast("bigint")
-    ).cache()
-    sig = emb.select("vec_id", "bucket")
-    a, b = sig.alias("a"), sig.alias("b")
-    cand = (
-        a.join(maybe_broadcast(b, sf_dir, "embeddings"),
-               (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-    )
+    # the copies are exact duplicates of v, so they share its signature
+    sigs = _hp_sigs(spark, sf_dir)
+    emb = sigs.unionByName(
+        sigs.filter(F.col("vec_id") % COPY_MOD == 0)
+        .withColumn("vec_id", F.col("vec_id") + F.lit(COPY_OFFSET)))
+    cand = _bucket_pairs(_hp_index(emb, PIPE_TABLE), "<").select(
+        F.col("vec_id").alias("va"), F.col("neighbor_id").alias("vb"))
     lhs = emb.select(F.col("vec_id").alias("va"), F.col("v").alias("xa"),
                      F.col("norm").alias("na"))
     rhs = emb.select(F.col("vec_id").alias("vb"), F.col("v").alias("xb"),
                      F.col("norm").alias("nb"))
-    from ..functions import vecfold
-    from .similarity import DIM
-
     dot = F.expr(vecfold.dot("xa", "xb", DIM))
     pairs = (
         cand.join(maybe_broadcast(lhs, sf_dir, "embeddings"), "va")
@@ -156,8 +126,8 @@ def ann_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_pipeline_oracle() -> str:
     from .dedup import _duck_components
+    from .similarity import _duck_bucket_pairs, _duck_hp, _duck_hp_index
 
-    sig = _pipe_signature_terms(False)
     return f"""
 WITH RECURSIVE emb AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -167,11 +137,14 @@ WITH RECURSIVE emb AS (
            list_transform(embedding, x -> CAST(x AS DOUBLE))
     FROM embeddings WHERE vec_id % {COPY_MOD} = 0
 ), sig AS (
-    SELECT vec_id, v, CAST({sig} AS BIGINT) AS bucket FROM emb
+    SELECT vec_id, v, {_duck_hp('v')} AS hp FROM emb
+), idx AS (
+    {_duck_hp_index('sig', PIPE_TABLE)}
 ), pairs AS (
-    SELECT a.vec_id AS va, b.vec_id AS vb
-    FROM sig a JOIN sig b
-      ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+    SELECT c.vec_id AS va, c.neighbor_id AS vb
+    FROM ({_duck_bucket_pairs('idx', '<')}) c
+    JOIN sig a ON a.vec_id = c.vec_id
+    JOIN sig b ON b.vec_id = c.neighbor_id
     WHERE list_dot_product(a.v, b.v)
           / (sqrt(list_dot_product(a.v, a.v))
              * sqrt(list_dot_product(b.v, b.v))) > {NEAR_DUP_COS}

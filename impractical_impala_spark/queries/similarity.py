@@ -4,11 +4,17 @@
   correctness baseline. JVM-side higher-order-function dot products; the
   join is (queries x corpus), so at scale you bound the query side and
   broadcast it.
-- ``ann_lsh_bucketed``: the scale path — 12-bit random-hyperplane
-  signatures; vectors only meet inside equal buckets (candidate space
-  shrinks ~4000x at uniform occupancy). Deterministic +/-1 hyperplanes
-  generated from a fixed integer pattern so the DuckDB oracle computes
-  the identical signature.
+- Random-hyperplane LSH (``ann_lsh_bucketed``, the tables / grid /
+  bits sweeps, ``ann_lsh_multiprobe``; also ``dedup.dedup_embedding_lsh``
+  and ``pipelines.ann_dedup_pipeline``) share ONE layer per engine:
+  every vector gets one 12-bit signature ``hp`` (bit p = projection on
+  deterministic +/-1 plane p is positive, so the DuckDB oracle computes
+  the identical signature), cached once per session (``_hp_sigs``);
+  every bucket layout is a shift and mask of ``hp`` (``_hp_index``) and
+  vectors only meet inside equal buckets (``_bucket_pairs``).
+- IVF, IVF-PQ and PQ indexes, each with a tuning sweep. Every sweep
+  scores its top-1 answers against the exact panel with one scorer
+  (``_exact_top1`` + ``_recall_at_1``).
 """
 
 from __future__ import annotations
@@ -18,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..broadcast_gate import maybe_broadcast
 from ..functions import vecfold
-from ..registry import register
+from ..registry import oracle_sql_of, register
 from ..sources import load_table
 
 DIM = 64
@@ -99,7 +105,147 @@ FROM ranked WHERE rn <= {TOP_K}
 """, "exact cosine top-k (brute-force baseline)")
 
 
+# ------------------------------------------- hyperplane-LSH layer
+# One definition per stage, in each engine. Every vector gets ONE
+# 12-bit signature ``hp``; every bucket layout in use is a shift and
+# mask of it — table t of a B-bit layout is (hp >> t*B) & (2^B - 1).
+def _hp_expr(col: str) -> str:
+    """Spark SQL for the 12-bit signature of vector ``col``: bit p is
+    ``proj_p > 0`` over plane p (row-scale: the fold stays, see the
+    vecfold.fold_dot docstring)."""
+    bits = " + ".join(
+        f"(CASE WHEN {vecfold.fold_dot_const(col, plane)} > 0"
+        f" THEN {1 << p} ELSE 0 END)"
+        for p, plane in enumerate(_planes()))
+    return f"cast({bits} as bigint)"
+
+
+def _duck_hp(col: str) -> str:
+    """DuckDB twin of ``_hp_expr``."""
+    bits = []
+    for p, plane in enumerate(_planes()):
+        arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
+        bits.append(f"(CASE WHEN list_dot_product({col}, {arr}) > 0"
+                    f" THEN {1 << p} ELSE 0 END)")
+    return f"CAST({' + '.join(bits)} AS BIGINT)"
+
+
+def _hp_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_emb`` plus ``hp``, cached. Every hyperplane query builds the
+    identical plan, so a session holds ONE signature cache entry; bucket
+    layouts are derived after the cache (``_hp_index``)."""
+    return _emb(spark, sf_dir).withColumn("hp", F.expr(_hp_expr("v"))).cache()
+
+
+def _duck_hp_sigs() -> str:
+    """DuckDB twin of ``_hp_sigs``: the ``embx`` and ``sig`` CTEs."""
+    return f"""embx AS (
+    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+    FROM embeddings
+), sig AS (
+    SELECT vec_id, v, {_duck_hp('v')} AS hp FROM embx
+)"""
+
+
 N_TABLES, BITS_PER_TABLE = 3, 4  # 12 planes = 3 tables x 4-bit signatures
+TABLES = tuple((BITS_PER_TABLE, t) for t in range(N_TABLES))
+
+
+def _hp_index(sigs: DataFrame, layouts) -> DataFrame:
+    """``(vec_id, bits, tbl, bkt)``: one row per vector and (bits, tbl)
+    cell of ``layouts``, from ONE explode of the cached signatures (a
+    per-table union re-reads the cache once per table)."""
+    cells = ", ".join(
+        f"named_struct('bits', {b}, 'tbl', {t},"
+        f" 'bkt', shiftright(hp, {t * b}) & {(1 << b) - 1})"
+        for b, t in layouts)
+    return sigs.select("vec_id", F.expr(f"inline(array({cells}))"))
+
+
+def _duck_hp_index(src: str, layouts) -> str:
+    """DuckDB twin of ``_hp_index`` over the relation ``src``."""
+    cells = ", ".join(f"({b}, {t})" for b, t in layouts)
+    return (f"SELECT s.vec_id, l.bits, l.tbl,"
+            f" (s.hp >> (l.tbl * l.bits)) & ((1 << l.bits) - 1) AS bkt"
+            f" FROM {src} s, (VALUES {cells}) l(bits, tbl)")
+
+
+def _bucket_pairs(idx: DataFrame, op: str) -> DataFrame:
+    """Distinct ``(bits, vec_id, neighbor_id)`` candidates: vectors
+    sharing a bucket in some table of the same layout. ``op`` compares
+    the ids: ``!=`` keeps both orientations (top-1 search), ``<`` one
+    (pair dedup). Ids only — never shuffle the vectors through the pair
+    dedup (arrays are wide; ids are 16 bytes)."""
+    a, b = idx.alias("a"), idx.alias("b")
+    return (a.join(b, (F.col("a.bits") == F.col("b.bits"))
+                   & (F.col("a.tbl") == F.col("b.tbl"))
+                   & (F.col("a.bkt") == F.col("b.bkt"))
+                   & F.expr(f"a.vec_id {op} b.vec_id"))
+            .select(F.col("a.bits").alias("bits"),
+                    F.col("a.vec_id").alias("vec_id"),
+                    F.col("b.vec_id").alias("neighbor_id"))
+            .dropDuplicates(["bits", "vec_id", "neighbor_id"]))
+
+
+def _duck_bucket_pairs(idx: str, op: str) -> str:
+    """DuckDB twin of ``_bucket_pairs`` over the relation ``idx``."""
+    return (f"SELECT DISTINCT a.bits, a.vec_id, b.vec_id AS neighbor_id"
+            f" FROM {idx} a JOIN {idx} b"
+            f" ON a.bits = b.bits AND a.tbl = b.tbl AND a.bkt = b.bkt"
+            f" AND a.vec_id {op} b.vec_id")
+
+
+def _with_cos(pairs: DataFrame, sigs: DataFrame, sf_dir: str) -> DataFrame:
+    """``pairs`` (vec_id, neighbor_id, ...) plus the pair's exact
+    ``cos``. Vectors are fetched back by id through size-gated
+    broadcasts (the full-corpus vector map grows with the data: past
+    the gate these joins shuffle on the id instead of pinning a
+    lake-scale OOM)."""
+    va = sigs.select("vec_id", F.col("v").alias("va"),
+                     F.col("norm").alias("na"))
+    vb = sigs.select(F.col("vec_id").alias("neighbor_id"),
+                     F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    dot = F.expr(vecfold.fold_dot("va", "vb"))
+    return (pairs.join(maybe_broadcast(va, sf_dir, "embeddings"), "vec_id")
+            .join(maybe_broadcast(vb, sf_dir, "embeddings"), "neighbor_id")
+            .withColumn("cos", dot / (F.col("na") * F.col("nb")))
+            .drop("va", "na", "vb", "nb"))
+
+
+def _duck_with_cos(pairs: str) -> str:
+    """DuckDB twin of ``_with_cos`` over the relation ``pairs`` (reads
+    the ``sig`` CTE of ``_duck_hp_sigs``)."""
+    return f"""SELECT p.*,
+           list_dot_product(q.v, n.v)
+           / (sqrt(list_dot_product(q.v, q.v))
+              * sqrt(list_dot_product(n.v, n.v))) AS cos
+    FROM {pairs} p
+    JOIN sig q ON q.vec_id = p.vec_id
+    JOIN sig n ON n.vec_id = p.neighbor_id"""
+
+
+def _top1(scored: DataFrame, keys=()) -> DataFrame:
+    """Each vector's best candidate per sweep point: ``(*keys,
+    query_id, ann_nn, ann_cos)`` from ``(*keys, vec_id, neighbor_id,
+    cos)``; ties break on the lower neighbor id."""
+    w = Window.partitionBy(*keys, "vec_id").orderBy(
+        F.col("cos").desc(), "neighbor_id")
+    return (scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(*keys, F.col("vec_id").alias("query_id"),
+                    F.col("neighbor_id").alias("ann_nn"),
+                    F.round("cos", 6).alias("ann_cos")))
+
+
+def _duck_top1(scored: str) -> str:
+    """DuckDB twin of ``_top1`` for one sweep point."""
+    return f"""SELECT vec_id AS query_id, neighbor_id AS ann_nn,
+           ROUND(cos, 6) AS ann_cos
+    FROM (SELECT vec_id, neighbor_id, cos,
+                 ROW_NUMBER() OVER (PARTITION BY vec_id
+                                    ORDER BY cos DESC, neighbor_id) AS rn
+          FROM ({scored}))
+    WHERE rn = 1"""
 
 
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,100 +255,110 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tight clusters — multiple tables is the standard fix). Then exact
     top-1 among candidates. Candidates only meet on signature equality,
     so the join scales."""
-    emb = _emb(spark, sf_dir)
-    planes = _planes()
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            proj = vecfold.fold_dot_const("v", plane)
-            terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << r} ELSE 0 END)")
-        emb = emb.withColumn(f"bucket{t}", F.expr(" + ".join(terms)).cast("bigint"))
-    emb = emb.cache()
-    # candidate id pairs only — never shuffle the vectors through the
-    # pair dedup (arrays are wide; ids are 16 bytes)
-    tables = None
-    for t in range(N_TABLES):
-        part = emb.select("vec_id", F.lit(t).alias("tbl"),
-                          F.col(f"bucket{t}").alias("bucket"))
-        tables = part if tables is None else tables.unionByName(part)
-    a, b = tables.alias("a"), tables.alias("b")
-    cand = (
-        a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") != F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_id"),
-                F.col("b.vec_id").alias("neighbor_id"))
-        .dropDuplicates(["vec_id", "neighbor_id"])
-    )
-    # fetch vectors back by id — size-gated broadcast (the full-corpus
-    # vector map grows with the data: past the gate these joins shuffle
-    # on the id instead of pinning a lake-scale OOM)
-    va = emb.select(F.col("vec_id").alias("vec_id"), F.col("v").alias("va"),
-                    F.col("norm").alias("na"))
-    vb = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb"),
-                    F.col("norm").alias("nb"))
+    sigs = _hp_sigs(spark, sf_dir)
+    cand = _bucket_pairs(_hp_index(sigs, TABLES), "!=")
+    # the corpus-wide candidate volume is pair-scale: its dot is the
+    # unroll, not _with_cos's panel-scale fold (OPTIMIZATION_r15.md)
+    va = sigs.select("vec_id", F.col("v").alias("va"),
+                     F.col("norm").alias("na"))
+    vb = sigs.select(F.col("vec_id").alias("neighbor_id"),
+                     F.col("v").alias("vb"), F.col("norm").alias("nb"))
     cand = cand.join(maybe_broadcast(va, sf_dir, "embeddings"), "vec_id") \
                .join(maybe_broadcast(vb, sf_dir, "embeddings"), "neighbor_id")
     dot = F.expr(vecfold.dot("va", "vb", DIM))
     scored = cand.select(
         "vec_id", "neighbor_id", (dot / (F.col("na") * F.col("nb"))).alias("cos")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    return _top1(scored).toDF("vec_id", "neighbor_id", "cos")
 
 
 def _lsh_oracle() -> str:
-    planes = _planes()
-    sig_cols = []
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-            terms.append(
-                f"(CASE WHEN list_dot_product(v, {arr}) > 0 THEN {1 << r} ELSE 0 END)"
-            )
-        sig_cols.append(f"CAST({' + '.join(terms)} AS BIGINT) AS bucket{t}")
-    tables_union = "\n    UNION ALL\n".join(
-        f"    SELECT vec_id, v, {t} AS tbl, bucket{t} AS bucket FROM sig"
-        for t in range(N_TABLES)
-    )
     return f"""
-WITH emb AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-), sig AS (
-    SELECT vec_id, v, {', '.join(sig_cols)} FROM emb
-), tables AS (
-{tables_union}
+WITH {_duck_hp_sigs()}, idx AS (
+    {_duck_hp_index('sig', TABLES)}
 ), cand AS (
-    SELECT DISTINCT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-           a.v AS va, b.v AS vb
-    FROM tables a JOIN tables b
-      ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-), scored AS (
-    SELECT vec_id, neighbor_id,
-           list_dot_product(va, vb)
-           / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb)))
-               AS cos
-    FROM cand
-), ranked AS (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cos DESC, neighbor_id) AS rn
-    FROM scored
+    {_duck_bucket_pairs('idx', '!=')}
 )
-SELECT vec_id, neighbor_id, ROUND(cos, 6) AS cos
-FROM ranked WHERE rn = 1
+SELECT query_id AS vec_id, ann_nn AS neighbor_id, ann_cos AS cos
+FROM ({_duck_top1(_duck_with_cos('cand'))})
 """
 
 
 register("ann_lsh_bucketed", ann_lsh_bucketed, _lsh_oracle(),
          "random-hyperplane LSH bucketed nearest neighbor")
+
+
+# ------------------------------------------------- recall@1 scorer
+RECALL_COLS = ("n_queries", "n_answered", "n_hit1", "recall1_ppm",
+               "cos_gap_micro")
+
+
+def _exact_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact top-1 panel every sweep scores against: ``(query_id,
+    exact_nn, exact_cos)``."""
+    return (ann_cosine_topk(spark, sf_dir)
+            .filter(F.col("rn") == 1)
+            .select("query_id",
+                    F.col("neighbor_id").alias("exact_nn"),
+                    F.col("cos").alias("exact_cos")))
+
+
+def _recall_at_1(exact1: DataFrame, top1: DataFrame,
+                 points: DataFrame | None = None) -> DataFrame:
+    """Score the ANN answers ``top1`` (``*keys, query_id, ann_nn,
+    ann_cos``) against the exact panel: per sweep point ``*keys,
+    n_queries, n_answered, n_hit1, recall1_ppm, cos_gap_micro``.
+    ``points`` holds the key rows of the sweep points (None: ``top1`` is
+    one point with no keys), so a point that answers no query still
+    scores every query. recall1_ppm is integer ppm and cos_gap_micro
+    the summed micro-quantized cosine regret of the answered queries,
+    quantized per query BEFORE summing, so the total is order-free
+    exact."""
+    keys = [] if points is None else points.columns
+    grid = exact1 if points is None else exact1.crossJoin(
+        F.broadcast(points))
+    answered = F.col("ann_nn").isNotNull()
+    return (grid.join(top1, [*keys, "query_id"], "left")
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("n_queries"),
+                 F.sum(F.when(answered, 1).otherwise(0)).alias("n_answered"),
+                 F.sum(F.when(F.col("ann_nn") == F.col("exact_nn"), 1)
+                       .otherwise(0)).alias("n_hit1"),
+                 F.sum(F.when(answered,
+                              F.round((F.col("exact_cos") - F.col("ann_cos"))
+                                      * 1_000_000).cast("long"))
+                       .otherwise(0)).alias("cos_gap_micro"))
+            .select(*keys, "n_queries", "n_answered", "n_hit1",
+                    F.expr("n_hit1 * 1000000 div n_queries")
+                    .alias("recall1_ppm"),
+                    "cos_gap_micro"))
+
+
+def _duck_exact_top1() -> str:
+    """DuckDB twin of ``_exact_top1``: the ``exact`` CTE."""
+    return (f"exact AS (SELECT query_id, neighbor_id AS exact_nn,"
+            f" cos AS exact_cos FROM"
+            f" ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1)")
+
+
+def _duck_recall_at_1(top1: str, lead: str) -> str:
+    """DuckDB twin of ``_recall_at_1`` for one sweep point: ``top1`` is
+    a relation ``(query_id, ann_nn, ann_cos)`` and ``lead`` the point's
+    leading SELECT items (``3 AS n_tables,``)."""
+    return f"""
+SELECT {lead}
+       CAST(COUNT(*) AS BIGINT) AS n_queries,
+       CAST(SUM(CASE WHEN l.ann_nn IS NOT NULL THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_answered,
+       CAST(SUM(CASE WHEN l.ann_nn = e.exact_nn THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_hit1,
+       CAST(SUM(CASE WHEN l.ann_nn = e.exact_nn THEN 1 ELSE 0 END)
+            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
+       CAST(SUM(CASE WHEN l.ann_nn IS NOT NULL
+                THEN CAST(ROUND((e.exact_cos - l.ann_cos) * 1000000)
+                          AS BIGINT)
+                ELSE 0 END) AS BIGINT) AS cos_gap_micro
+FROM exact e LEFT JOIN ({top1}) l USING (query_id)"""
 
 
 # ------------------------------------------------- LSH tables sweep
@@ -222,145 +378,40 @@ def ann_lsh_tables_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     default. Signatures compute once (cached); per sweep point one
     bucket-key equi join on (id, bucket) rows and panel-sized scoring
     joins — never all-pairs."""
-    emb = _emb(spark, sf_dir)
-    planes = _planes()
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            proj = vecfold.fold_dot_const("v", plane)
-            terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << r} ELSE 0 END)")
-        emb = emb.withColumn(f"bucket{t}",
-                             F.expr(" + ".join(terms)).cast("bigint"))
-    emb = emb.cache()
-    exact1 = (ann_cosine_topk(spark, sf_dir)
-              .filter(F.col("rn") == 1)
-              .select("query_id",
-                      F.col("neighbor_id").alias("exact_nn"),
-                      F.col("cos").alias("exact_cos")))
-    va = emb.select(F.col("vec_id").alias("vec_id"), F.col("v").alias("va"),
-                    F.col("norm").alias("na"))
-    vb = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.expr(vecfold.fold_dot("va", "vb"))
+    sigs = _hp_sigs(spark, sf_dir)
+    idx = _hp_index(sigs, TABLES)
+    exact1 = _exact_top1(spark, sf_dir)
     out = None
     for nt in TABLE_SWEEP:
-        tables = None
-        for t in range(nt):
-            part = emb.select("vec_id", F.lit(t).alias("tbl"),
-                              F.col(f"bucket{t}").alias("bucket"))
-            tables = part if tables is None else tables.unionByName(part)
-        a, b = tables.alias("a"), tables.alias("b")
-        cand = (a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-                       & (F.col("a.bucket") == F.col("b.bucket"))
-                       & (F.col("a.vec_id") != F.col("b.vec_id")))
-                .select(F.col("a.vec_id").alias("vec_id"),
-                        F.col("b.vec_id").alias("neighbor_id"))
-                .dropDuplicates(["vec_id", "neighbor_id"]))
+        cand = _bucket_pairs(idx.filter(F.col("tbl") < nt), "!=")
         vol = cand.agg(
             F.coalesce(F.sum(F.expr(
                 "cast(vec_id < neighbor_id as int)")), F.lit(0))
             .cast("long").alias("n_cand_pairs"))
-        scored = (cand.filter(F.col("vec_id") < N_QUERIES)
-                  .join(maybe_broadcast(va, sf_dir, "embeddings"), "vec_id")
-                  .join(maybe_broadcast(vb, sf_dir, "embeddings"),
-                        "neighbor_id")
-                  .select(F.col("vec_id").alias("query_id"), "neighbor_id",
-                          (dot / (F.col("na") * F.col("nb"))).alias("cos")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), "neighbor_id")
-        top1 = (scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("query_id", F.col("neighbor_id").alias("lsh_nn"),
-                        F.round("cos", 6).alias("lsh_cos")))
-        stat = (exact1.join(top1, "query_id", "left")
-                .agg(F.count(F.lit(1)).alias("n_queries"),
-                     F.sum(F.when(F.col("lsh_nn").isNotNull(), 1)
-                           .otherwise(0)).alias("n_answered"),
-                     F.sum(F.when(F.col("lsh_nn") == F.col("exact_nn"), 1)
-                           .otherwise(0)).alias("n_hit1"),
-                     F.sum(F.when(F.col("lsh_nn").isNotNull(),
-                                  F.round((F.col("exact_cos")
-                                           - F.col("lsh_cos"))
-                                          * 1_000_000).cast("long"))
-                           .otherwise(0)).alias("cos_gap_micro")))
-        row = (stat.crossJoin(F.broadcast(vol))
+        top1 = _top1(_with_cos(cand.filter(F.col("vec_id") < N_QUERIES),
+                               sigs, sf_dir))
+        row = (_recall_at_1(exact1, top1).crossJoin(F.broadcast(vol))
                .select(F.lit(nt).alias("n_tables"), "n_cand_pairs",
-                       "n_queries", "n_answered", "n_hit1",
-                       F.expr("n_hit1 * 1000000 div n_queries")
-                       .alias("recall1_ppm"),
-                       "cos_gap_micro"))
+                       *RECALL_COLS))
         out = row if out is None else out.unionByName(row)
     return out.orderBy("n_tables")
 
 
 def _tables_sweep_oracle() -> str:
-    from ..registry import oracle_sql_of
-
-    planes = _planes()
-    sig_cols = []
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-            terms.append(f"(CASE WHEN list_dot_product(v, {arr}) > 0"
-                         f" THEN {1 << r} ELSE 0 END)")
-        sig_cols.append(
-            f"CAST({' + '.join(terms)} AS BIGINT) AS bucket{t}")
-    blocks = [f"""exact AS (
-    SELECT query_id, neighbor_id AS exact_nn, cos AS exact_cos
-    FROM ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1
-), emb AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-), sig AS (
-    SELECT vec_id, v, {', '.join(sig_cols)} FROM emb
+    blocks = [f"""{_duck_exact_top1()}, {_duck_hp_sigs()}, idx AS (
+    {_duck_hp_index('sig', TABLES)}
 )"""]
     selects = []
     for nt in TABLE_SWEEP:
-        tables_union = "\n    UNION ALL\n".join(
-            f"    SELECT vec_id, v, {t} AS tbl, bucket{t} AS bucket FROM sig"
-            for t in range(nt))
-        blocks.append(f""", tables{nt} AS (
-{tables_union}
-), cand{nt} AS (
-    SELECT DISTINCT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-           a.v AS va, b.v AS vb
-    FROM tables{nt} a JOIN tables{nt} b
-      ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-), top{nt} AS (
-    SELECT query_id, neighbor_id AS lsh_nn, ROUND(cos, 6) AS lsh_cos
-    FROM (SELECT vec_id AS query_id, neighbor_id,
-                 list_dot_product(va, vb)
-                 / (sqrt(list_dot_product(va, va))
-                    * sqrt(list_dot_product(vb, vb))) AS cos,
-                 ROW_NUMBER() OVER (
-                     PARTITION BY vec_id
-                     ORDER BY list_dot_product(va, vb)
-                              / (sqrt(list_dot_product(va, va))
-                                 * sqrt(list_dot_product(vb, vb))) DESC,
-                              neighbor_id) AS rn
-          FROM cand{nt} WHERE vec_id < {N_QUERIES})
-    WHERE rn = 1
+        blocks.append(f""", cand{nt} AS (
+    {_duck_bucket_pairs(f'(SELECT * FROM idx WHERE tbl < {nt})', '!=')}
 )""")
-        selects.append(f"""
-SELECT {nt} AS n_tables,
+        panel = _duck_with_cos(f"(SELECT * FROM cand{nt}"
+                               f" WHERE vec_id < {N_QUERIES})")
+        selects.append(_duck_recall_at_1(_duck_top1(panel), f"""{nt} AS n_tables,
        (SELECT CAST(COALESCE(SUM(CASE WHEN vec_id < neighbor_id
                              THEN 1 ELSE 0 END), 0) AS BIGINT)
-        FROM cand{nt}) AS n_cand_pairs,
-       CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CASE WHEN l.lsh_nn IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_answered,
-       CAST(SUM(CASE WHEN l.lsh_nn = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit1,
-       CAST(SUM(CASE WHEN l.lsh_nn = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
-       CAST(SUM(CASE WHEN l.lsh_nn IS NOT NULL
-                THEN CAST(ROUND((e.exact_cos - l.lsh_cos) * 1000000)
-                          AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS cos_gap_micro
-FROM exact e LEFT JOIN top{nt} l USING (query_id)""")
+        FROM cand{nt}) AS n_cand_pairs,"""))
     u = "\nUNION ALL\n".join(selects)
     return ("WITH " + "".join(blocks)
             + f"\nSELECT * FROM (\n{u}\n) ORDER BY n_tables")
@@ -400,43 +451,20 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r12 ask #4 (sanctioned growth: "multi-probe LSH closes the
     probe-count/recall gap of ann_lsh_bucketed").
     """
-    emb = _emb(spark, sf_dir)
-    planes = _planes()
-    terms = []
-    for r in range(MP_BITS):
-        plane = planes[r]
-        proj = vecfold.fold_dot_const("v", plane)
-        terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << r} ELSE 0 END)")
-    emb = emb.withColumn("sig", F.expr(" + ".join(terms)).cast("bigint"))
-    emb = emb.cache()
-    sigs = emb.select("vec_id", "sig")
+    sigs = _hp_sigs(spark, sf_dir)
     # 13 probe keys per vector, ids only — one Generate, no 13-way union
     probe_structs = ", ".join(
-        ["named_struct('key', sig, 'rad', 0)"]
-        + [f"named_struct('key', sig ^ {1 << r}, 'rad', 1)"
+        ["named_struct('key', hp, 'rad', 0)"]
+        + [f"named_struct('key', hp ^ {1 << r}, 'rad', 1)"
            for r in range(MP_BITS)])
-    probes = sigs.select(
-        "vec_id", F.expr(f"explode(array({probe_structs}))").alias("p")
-    ).select("vec_id", F.col("p.key").alias("key"),
-             F.col("p.rad").alias("rad"))
+    probes = sigs.select("vec_id", F.expr(f"inline(array({probe_structs}))"))
     cand = (
         probes.join(sigs.select(F.col("vec_id").alias("neighbor_id"),
-                                F.col("sig").alias("nsig")),
+                                F.col("hp").alias("nsig")),
                     (F.col("key") == F.col("nsig"))
                     & (F.col("vec_id") != F.col("neighbor_id")))
         .select("vec_id", "neighbor_id", "rad"))
-    # fetch vectors back by id — size-gated broadcast, as in
-    # ann_lsh_bucketed (ids shuffle through the bucket join, not arrays)
-    va = emb.select(F.col("vec_id").alias("vec_id"), F.col("v").alias("va"),
-                    F.col("norm").alias("na"))
-    vb = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    cand = cand.join(maybe_broadcast(va, sf_dir, "embeddings"), "vec_id") \
-               .join(maybe_broadcast(vb, sf_dir, "embeddings"), "neighbor_id")
-    dot = F.expr(vecfold.fold_dot("va", "vb"))
-    scored = cand.select(
-        "vec_id", "neighbor_id", "rad",
-        (dot / (F.col("na") * F.col("nb"))).alias("cos"))
+    scored = _with_cos(cand, sigs, sf_dir)
     # probe levels: 0 = exact bucket (1 probe), 1 = + bit flips (13)
     lv = scored.select(
         "*", F.explode(F.array(F.lit(0), F.lit(1))).alias("lvl")
@@ -458,37 +486,18 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _multiprobe_oracle() -> str:
-    planes = _planes()
-    terms = []
-    for r in range(MP_BITS):
-        plane = planes[r]
-        arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-        terms.append(
-            f"(CASE WHEN list_dot_product(v, {arr}) > 0 THEN {1 << r}"
-            " ELSE 0 END)")
     probe_union = "\n    UNION ALL\n".join(
-        ["    SELECT vec_id, sig AS key, 0 AS rad FROM sig"]
-        + [f"    SELECT vec_id, xor(sig, {1 << r}), 1 FROM sig"
+        ["    SELECT vec_id, hp AS key, 0 AS rad FROM sig"]
+        + [f"    SELECT vec_id, xor(hp, {1 << r}), 1 FROM sig"
            for r in range(MP_BITS)])
     return f"""
-WITH emb AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-), sig AS (
-    SELECT vec_id, v, CAST({' + '.join(terms)} AS BIGINT) AS sig FROM emb
-), probes AS (
+WITH {_duck_hp_sigs()}, probes AS (
 {probe_union}
 ), cand AS (
-    SELECT p.vec_id, b.vec_id AS neighbor_id, p.rad, a.v AS va, b.v AS vb
-    FROM probes p
-    JOIN sig b ON p.key = b.sig AND p.vec_id <> b.vec_id
-    JOIN sig a ON a.vec_id = p.vec_id
+    SELECT p.vec_id, b.vec_id AS neighbor_id, p.rad
+    FROM probes p JOIN sig b ON p.key = b.hp AND p.vec_id <> b.vec_id
 ), scored AS (
-    SELECT vec_id, neighbor_id, rad,
-           list_dot_product(va, vb)
-           / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb)))
-               AS cos
-    FROM cand
+    {_duck_with_cos('cand')}
 ), lv AS (
     SELECT 0 AS lvl UNION ALL SELECT 1
 ), pairs_lv AS (
@@ -848,9 +857,6 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..registry import oracle_sql_of  # composed-oracle reuse
-
-
 register("ann_recall_audit", ann_recall_audit, f"""
 WITH exact AS (SELECT * FROM ({oracle_sql_of("ann_cosine_topk")}) e0),
 lsh AS (SELECT * FROM ({oracle_sql_of("ann_lsh_bucketed")}) l0
@@ -896,32 +902,14 @@ def _nprobe_sweep(spark: SparkSession, sf_dir: str,
     centroid-bounded so the sweep is ~|PROBE_SWEEP|x one IVF search,
     all panel-sized joins). Used by ann_ivf_nprobe_sweep (seed
     quantizer) and ann_ivf_trained_sweep (Lloyd-trained quantizer)."""
-    exact1 = (ann_cosine_topk(spark, sf_dir)
-              .filter(F.col("rn") == 1)
-              .select("query_id",
-                      F.col("neighbor_id").alias("exact_nn"),
-                      F.col("cos").alias("exact_cos")))
+    exact1 = _exact_top1(spark, sf_dir)
     out = None
     for p in PROBE_SWEEP:
         ivf = _ivf_search(emb, cent, n_probe=p).select(
-            "query_id", F.col("neighbor_id").alias("ivf_nn"),
-            F.col("cos").alias("ivf_cos"))
-        s = (exact1.join(ivf, "query_id", "left")
-             .agg(F.count(F.lit(1)).alias("n_queries"),
-                  F.sum(F.when(F.col("ivf_nn").isNotNull(), 1)
-                        .otherwise(0)).alias("n_answered"),
-                  F.sum(F.when(F.col("ivf_nn") == F.col("exact_nn"), 1)
-                        .otherwise(0)).alias("n_hit1"),
-                  F.sum(F.when(F.col("ivf_nn").isNotNull(),
-                               F.round((F.col("exact_cos")
-                                        - F.col("ivf_cos"))
-                                       * 1_000_000).cast("long"))
-                        .otherwise(0)).alias("cos_gap_micro"))
-             .select(F.lit(p).alias("n_probe"), "n_queries", "n_answered",
-                     "n_hit1",
-                     F.expr("n_hit1 * 1000000 div n_queries")
-                     .alias("recall1_ppm"),
-                     "cos_gap_micro"))
+            "query_id", F.col("neighbor_id").alias("ann_nn"),
+            F.col("cos").alias("ann_cos"))
+        s = (_recall_at_1(exact1, ivf)
+             .select(F.lit(p).alias("n_probe"), *RECALL_COLS))
         out = s if out is None else out.unionByName(s)
     return out.orderBy("n_probe")
 
@@ -958,27 +946,12 @@ def ann_ivf_trained_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sweep_oracle(pre: str = "", cent_sql: str = "") -> str:
-    from ..registry import oracle_sql_of
-
-    blocks, selects = [], []
-    blocks.append(f"exact AS (SELECT query_id, neighbor_id AS exact_nn,"
-                  f" cos AS exact_cos FROM"
-                  f" ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1)")
+    blocks, selects = [_duck_exact_top1()], []
     for p in PROBE_SWEEP:
         blocks.append(f"ivf{p} AS ({_ivf_oracle(p, pre=pre, cent_sql=cent_sql)})")
-        selects.append(f"""
-SELECT {p} AS n_probe,
-       CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_answered,
-       CAST(SUM(CASE WHEN i.neighbor_id = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit1,
-       CAST(SUM(CASE WHEN i.neighbor_id = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
-       CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL
-                THEN CAST(ROUND((e.exact_cos - i.cos) * 1000000) AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS cos_gap_micro
-FROM exact e LEFT JOIN ivf{p} i USING (query_id)""")
+        selects.append(_duck_recall_at_1(
+            f"SELECT query_id, neighbor_id AS ann_nn, cos AS ann_cos"
+            f" FROM ivf{p}", f"{p} AS n_probe,"))
     u = "\nUNION ALL\n".join(selects)
     return ("WITH " + ",\n".join(blocks)
             + f"\nSELECT * FROM (\n{u}\n) ORDER BY n_probe")
@@ -1198,6 +1171,38 @@ register(
 
 
 # ------------------------------------------- IVF-PQ probe sweep
+def _adc_top1(emb: DataFrame, search: DataFrame) -> DataFrame:
+    """The TRUE cosine of each query's ADC top-1 choice in ``search``
+    (an ``_ivf_pq_search`` result): ``(query_id, ann_nn, ann_cos)``.
+    Broadcasts the panel-sized top-1 table and reads the corpus once
+    per side."""
+    top1 = search.filter(F.col("rank") == 1).select("query_id", "neighbor_id")
+    qv = emb.select(F.col("vec_id").alias("query_id"),
+                    F.col("v").alias("qv"), F.col("norm").alias("qn"))
+    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
+                    F.col("v").alias("nv"), F.col("norm").alias("nn_"))
+    tcos = F.expr(vecfold.fold_dot("qv", "nv"))
+    return (qv.join(F.broadcast(top1), "query_id")
+            .join(F.broadcast(nv.join(
+                F.broadcast(top1.select("neighbor_id").distinct()),
+                "neighbor_id")), "neighbor_id")
+            .select("query_id", F.col("neighbor_id").alias("ann_nn"),
+                    F.round(tcos / (F.col("qn") * F.col("nn_")), 6)
+                    .alias("ann_cos")))
+
+
+def _duck_adc_top1(pq: str) -> str:
+    """DuckDB twin of ``_adc_top1`` over the search relation ``pq``
+    (reads the ``embx`` CTE)."""
+    return f"""SELECT t.query_id, t.neighbor_id AS ann_nn,
+           ROUND(list_dot_product(q.v, n.v)
+                 / (sqrt(list_dot_product(q.v, q.v))
+                    * sqrt(list_dot_product(n.v, n.v))), 6) AS ann_cos
+    FROM (SELECT query_id, neighbor_id FROM {pq} WHERE rank = 1) t
+    JOIN embx q ON q.vec_id = t.query_id
+    JOIN embx n ON n.vec_id = t.neighbor_id"""
+
+
 def ann_ivf_pq_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC cosine-regret vs nprobe over the TRAINED coarse quantizer —
     the last ANN family without a measured tuning curve (VERDICT r13
@@ -1228,53 +1233,18 @@ def ann_ivf_pq_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     family the hygiene sweep proves bounded)."""
     emb = _emb(spark, sf_dir).cache()
     cent = train_ivf_centroids(spark, ivf_training_sample(emb))
-    exact1 = (ann_cosine_topk(spark, sf_dir)
-              .filter(F.col("rn") == 1)
-              .select("query_id",
-                      F.col("neighbor_id").alias("exact_nn"),
-                      F.col("cos").alias("exact_cos")))
-    qv = emb.select(F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qv"), F.col("norm").alias("qn"))
-    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("v").alias("nv"), F.col("norm").alias("nn_"))
-    tcos = F.expr(vecfold.fold_dot("qv", "nv"))
+    exact1 = _exact_top1(spark, sf_dir)
     out = None
     for p in PROBE_SWEEP:
-        top1 = (_ivf_pq_search(emb, cent, n_probe=p, reuse_codes=True)
-                .filter(F.col("rank") == 1)
-                .select("query_id", "neighbor_id"))
-        # true cosine of the ADC choice: broadcast the panel-sized
-        # top-1 table, read the corpus once per side
-        chosen = (qv.join(F.broadcast(top1), "query_id")
-                  .join(F.broadcast(nv.join(
-                      F.broadcast(top1.select("neighbor_id").distinct()),
-                      "neighbor_id")), "neighbor_id")
-                  .select("query_id", "neighbor_id",
-                          F.round(tcos / (F.col("qn") * F.col("nn_")), 6)
-                          .alias("adc_cos")))
-        s = (exact1.join(chosen, "query_id", "left")
-             .agg(F.count(F.lit(1)).alias("n_queries"),
-                  F.sum(F.when(F.col("neighbor_id").isNotNull(), 1)
-                        .otherwise(0)).alias("n_answered"),
-                  F.sum(F.when(F.col("neighbor_id") == F.col("exact_nn"),
-                               1).otherwise(0)).alias("n_hit1"),
-                  F.sum(F.when(F.col("neighbor_id").isNotNull(),
-                               F.round((F.col("exact_cos")
-                                        - F.col("adc_cos"))
-                                       * 1_000_000).cast("long"))
-                        .otherwise(0)).alias("cos_gap_micro"))
-             .select(F.lit(p).alias("n_probe"), "n_queries", "n_answered",
-                     "n_hit1",
-                     F.expr("n_hit1 * 1000000 div n_queries")
-                     .alias("recall1_ppm"),
-                     "cos_gap_micro"))
+        top1 = _adc_top1(
+            emb, _ivf_pq_search(emb, cent, n_probe=p, reuse_codes=True))
+        s = (_recall_at_1(exact1, top1)
+             .select(F.lit(p).alias("n_probe"), *RECALL_COLS))
         out = s if out is None else out.unionByName(s)
     return out.orderBy("n_probe")
 
 
 def _pq_sweep_oracle() -> str:
-    from ..registry import oracle_sql_of
-
     pre = _trained_ivf_pre()
     cent_sql = (f"SELECT cell_id, "
                 f"list_transform(cq, c -> c / {Q_SCALE}.0) AS cv "
@@ -1283,34 +1253,12 @@ def _pq_sweep_oracle() -> str:
     blocks.append("embx AS (SELECT vec_id,"
                   " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
                   " FROM embeddings)")
-    blocks.append(f"exact AS (SELECT query_id, neighbor_id AS exact_nn,"
-                  f" cos AS exact_cos FROM"
-                  f" ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1)")
+    blocks.append(_duck_exact_top1())
     for p in PROBE_SWEEP:
         blocks.append(
             f"pq{p} AS ({_ivf_pq_oracle(pre=pre, cent_sql=cent_sql, n_probe=p)})")
-        selects.append(f"""
-SELECT {p} AS n_probe,
-       CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_answered,
-       CAST(SUM(CASE WHEN i.neighbor_id = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit1,
-       CAST(SUM(CASE WHEN i.neighbor_id = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
-       CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL
-                THEN CAST(ROUND((e.exact_cos - i.adc_cos) * 1000000)
-                          AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS cos_gap_micro
-FROM exact e LEFT JOIN (
-    SELECT t.query_id, t.neighbor_id,
-           ROUND(list_dot_product(q.v, n.v)
-                 / (sqrt(list_dot_product(q.v, q.v))
-                    * sqrt(list_dot_product(n.v, n.v))), 6) AS adc_cos
-    FROM (SELECT query_id, neighbor_id FROM pq{p} WHERE rank = 1) t
-    JOIN embx q ON q.vec_id = t.query_id
-    JOIN embx n ON n.vec_id = t.neighbor_id
-) i USING (query_id)""")
+        selects.append(_duck_recall_at_1(_duck_adc_top1(f"pq{p}"),
+                                         f"{p} AS n_probe,"))
     u = "\nUNION ALL\n".join(selects)
     return ("WITH " + ",\n".join(blocks)
             + f"\nSELECT * FROM (\n{u}\n) ORDER BY n_probe")
@@ -1346,62 +1294,31 @@ def ann_lsh_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     output — is the only corpus-pair-scale frame, exactly as in the
     1-D sweeps; panel scoring joins are panel-sized. Never all-pairs.
     """
-    emb = _emb(spark, sf_dir)
-    planes = _planes()
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            proj = vecfold.fold_dot_const("v", plane)
-            terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << r} ELSE 0 END)")
-        emb = emb.withColumn(f"bucket{t}",
-                             F.expr(" + ".join(terms)).cast("bigint"))
-    emb = emb.cache()
-    idx = None
-    for t in range(N_TABLES):
-        part = emb.select("vec_id", F.lit(t).alias("tbl"),
-                          F.col(f"bucket{t}").alias("bkt"))
-        idx = part if idx is None else idx.unionByName(part)
+    sigs = _hp_sigs(spark, sf_dir)
+    idx = _hp_index(sigs, TABLES)
     flips = ", ".join(f"own ^ {1 << b}" for b in range(BITS_PER_TABLE))
-    probe = (idx.select(F.col("vec_id").alias("a_id"), "tbl",
-                        F.col("bkt").alias("own"))
-             .select("a_id", "tbl", "own",
+    probe = (idx.select("vec_id", "tbl", F.col("bkt").alias("own"))
+             .select("vec_id", "tbl", "own",
                      F.expr(f"explode(array(own, {flips}))").alias("key")))
-    joined = (probe.join(idx.select(F.col("vec_id").alias("b_id"), "tbl",
-                                    "bkt"),
+    joined = (probe.join(idx.select(F.col("vec_id").alias("neighbor_id"),
+                                    "tbl", "bkt"),
                          ["tbl"])
               .filter((F.col("key") == F.col("bkt"))
-                      & (F.col("a_id") != F.col("b_id"))))
-    pairq = (joined.groupBy("a_id", "b_id")
+                      & (F.col("vec_id") != F.col("neighbor_id"))))
+    pairq = (joined.groupBy("vec_id", "neighbor_id")
              .agg(F.min(F.when(F.col("own") == F.col("bkt"), F.col("tbl")))
                   .alias("mint0"),
                   F.min("tbl").alias("mint1"))
              .cache())
-    exact1 = (ann_cosine_topk(spark, sf_dir)
-              .filter(F.col("rn") == 1)
-              .select("query_id",
-                      F.col("neighbor_id").alias("exact_nn"),
-                      F.col("cos").alias("exact_cos")))
-    va = emb.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"),
-                    F.col("norm").alias("na"))
-    vb = emb.select(F.col("vec_id").alias("b_id"),
-                    F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.expr(vecfold.fold_dot("va", "vb"))
-    panel = (pairq.filter(F.col("a_id") < N_QUERIES)
-             .join(maybe_broadcast(va, sf_dir, "embeddings"), "a_id")
-             .join(maybe_broadcast(vb, sf_dir, "embeddings"), "b_id")
-             .select(F.col("a_id").alias("query_id"),
-                     F.col("b_id").alias("neighbor_id"),
-                     "mint0", "mint1",
-                     (dot / (F.col("na") * F.col("nb"))).alias("cos"))
-             .cache())
+    panel = _with_cos(pairq.filter(F.col("vec_id") < N_QUERIES),
+                      sigs, sf_dir).cache()
     points = [(nt, rad) for nt in TABLE_SWEEP for rad in GRID_RADII]
     # all 12 candidate-volume cells in ONE pass over the pair table
     # (six filtered re-aggregations would re-scan the cache six times)
     vols = pairq.agg(*[
         F.coalesce(F.sum(F.expr(
-            f"cast(a_id < b_id and min{'t0' if rad == 0 else 't1'} < {nt}"
-            " as int)")), F.lit(0)).cast("long").alias(f"v_{nt}_{rad}")
+            f"cast(vec_id < neighbor_id and min{'t0' if rad == 0 else 't1'}"
+            f" < {nt} as int)")), F.lit(0)).cast("long").alias(f"v_{nt}_{rad}")
         for nt, rad in points])
     vol_stack = ", ".join(f"{nt}, {rad}, v_{nt}_{rad}" for nt, rad in points)
     vol_rows = vols.select(F.expr(
@@ -1410,121 +1327,46 @@ def ann_lsh_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tops = None
     for nt, rad in points:
         qual = F.col("mint0" if rad == 0 else "mint1") < nt
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), "neighbor_id")
-        top1 = (panel.filter(qual)
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
+        top1 = (_top1(panel.filter(qual))
                 .select(F.lit(nt).alias("n_tables"),
-                        F.lit(rad).alias("probe_radius"),
-                        "query_id",
-                        F.col("neighbor_id").alias("lsh_nn"),
-                        F.round("cos", 6).alias("lsh_cos")))
+                        F.lit(rad).alias("probe_radius"), "*"))
         tops = top1 if tops is None else tops.unionByName(top1)
-    grid_keys = (exact1.crossJoin(
-        vol_rows.select("n_tables", "probe_radius")))
-    stats = (grid_keys.join(tops, ["n_tables", "probe_radius", "query_id"],
-                            "left")
-             .groupBy("n_tables", "probe_radius")
-             .agg(F.count(F.lit(1)).alias("n_queries"),
-                  F.sum(F.when(F.col("lsh_nn").isNotNull(), 1)
-                        .otherwise(0)).alias("n_answered"),
-                  F.sum(F.when(F.col("lsh_nn") == F.col("exact_nn"), 1)
-                        .otherwise(0)).alias("n_hit1"),
-                  F.sum(F.when(F.col("lsh_nn").isNotNull(),
-                               F.round((F.col("exact_cos")
-                                        - F.col("lsh_cos"))
-                                       * 1_000_000).cast("long"))
-                        .otherwise(0)).alias("cos_gap_micro")))
-    return (stats.join(F.broadcast(vol_rows), ["n_tables", "probe_radius"])
-            .select("n_tables", "probe_radius", "n_cand_pairs",
-                    "n_queries", "n_answered", "n_hit1",
-                    F.expr("n_hit1 * 1000000 div n_queries")
-                    .alias("recall1_ppm"),
-                    "cos_gap_micro")
-            .orderBy("n_tables", "probe_radius"))
+    keys = ["n_tables", "probe_radius"]
+    stats = _recall_at_1(_exact_top1(spark, sf_dir), tops,
+                         vol_rows.select(*keys))
+    return (stats.join(F.broadcast(vol_rows), keys)
+            .select(*keys, "n_cand_pairs", *RECALL_COLS)
+            .orderBy(*keys))
 
 
 def _lsh_grid_oracle() -> str:
-    from ..registry import oracle_sql_of
-
-    planes = _planes()
-    sig_cols = []
-    for t in range(N_TABLES):
-        terms = []
-        for r in range(BITS_PER_TABLE):
-            plane = planes[t * BITS_PER_TABLE + r]
-            arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)" for s in plane) + "]"
-            terms.append(f"(CASE WHEN list_dot_product(v, {arr}) > 0"
-                         f" THEN {1 << r} ELSE 0 END)")
-        sig_cols.append(
-            f"CAST({' + '.join(terms)} AS BIGINT) AS bucket{t}")
-    idx_union = "\n    UNION ALL\n".join(
-        f"    SELECT vec_id, {t} AS tbl, bucket{t} AS bkt FROM sig"
-        for t in range(N_TABLES))
-    flips = ", ".join(f"xor(own, {1 << b})" for b in range(BITS_PER_TABLE))
-    blocks = [f"""exact AS (
-    SELECT query_id, neighbor_id AS exact_nn, cos AS exact_cos
-    FROM ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1
-), embx AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-), sig AS (
-    SELECT vec_id, {', '.join(sig_cols)} FROM embx
-), idx AS (
-{idx_union}
+    flips = ", ".join(f"xor(bkt, {1 << b})" for b in range(BITS_PER_TABLE))
+    blocks = f"""{_duck_exact_top1()}, {_duck_hp_sigs()}, idx AS (
+    {_duck_hp_index('sig', TABLES)}
 ), probe AS (
-    SELECT vec_id AS a_id, tbl, bkt AS own,
-           UNNEST([own, {flips}]) AS key
-    FROM (SELECT vec_id, tbl, bkt, bkt AS own FROM idx)
+    SELECT vec_id, tbl, bkt AS own, UNNEST([bkt, {flips}]) AS key FROM idx
 ), pairq AS (
-    SELECT p.a_id, i.vec_id AS b_id,
+    SELECT p.vec_id, i.vec_id AS neighbor_id,
            MIN(CASE WHEN p.own = i.bkt THEN p.tbl END) AS mint0,
            MIN(p.tbl) AS mint1
     FROM probe p JOIN idx i
-      ON i.tbl = p.tbl AND i.bkt = p.key AND i.vec_id <> p.a_id
+      ON i.tbl = p.tbl AND i.bkt = p.key AND i.vec_id <> p.vec_id
     GROUP BY 1, 2
 ), panel AS (
-    SELECT pr.a_id AS query_id, pr.b_id AS neighbor_id,
-           pr.mint0, pr.mint1,
-           list_dot_product(q.v, n.v)
-           / (sqrt(list_dot_product(q.v, q.v))
-              * sqrt(list_dot_product(n.v, n.v))) AS cos
-    FROM pairq pr
-    JOIN embx q ON q.vec_id = pr.a_id
-    JOIN embx n ON n.vec_id = pr.b_id
-    WHERE pr.a_id < {N_QUERIES}
-)"""]
+    {_duck_with_cos(f'(SELECT * FROM pairq WHERE vec_id < {N_QUERIES})')}
+)"""
     selects = []
     for nt in TABLE_SWEEP:
         for rad in GRID_RADII:
             qcol = "mint0" if rad == 0 else "mint1"
-            selects.append(f"""
-SELECT {nt} AS n_tables, {rad} AS probe_radius,
-       (SELECT CAST(COALESCE(SUM(CASE WHEN a_id < b_id
+            selects.append(_duck_recall_at_1(
+                _duck_top1(f"SELECT * FROM panel WHERE {qcol} < {nt}"),
+                f"""{nt} AS n_tables, {rad} AS probe_radius,
+       (SELECT CAST(COALESCE(SUM(CASE WHEN vec_id < neighbor_id
                              THEN 1 ELSE 0 END), 0) AS BIGINT)
-        FROM pairq WHERE {qcol} < {nt}) AS n_cand_pairs,
-       CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CASE WHEN l.lsh_nn IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_answered,
-       CAST(SUM(CASE WHEN l.lsh_nn = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit1,
-       CAST(SUM(CASE WHEN l.lsh_nn = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
-       CAST(SUM(CASE WHEN l.lsh_nn IS NOT NULL
-                THEN CAST(ROUND((e.exact_cos - l.lsh_cos) * 1000000)
-                          AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS cos_gap_micro
-FROM exact e LEFT JOIN (
-    SELECT query_id, neighbor_id AS lsh_nn, ROUND(cos, 6) AS lsh_cos
-    FROM (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY cos DESC, neighbor_id) AS rn
-          FROM panel WHERE {qcol} < {nt})
-    WHERE rn = 1
-) l USING (query_id)""")
+        FROM pairq WHERE {qcol} < {nt}) AS n_cand_pairs,"""))
     u = "\nUNION ALL\n".join(selects)
-    return ("WITH " + "".join(blocks)
+    return ("WITH " + blocks
             + f"\nSELECT * FROM (\n{u}\n) ORDER BY n_tables, probe_radius")
 
 
@@ -1562,16 +1404,7 @@ def ann_pq_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface carries a full hash oracle."""
     emb = _emb(spark, sf_dir).cache()
     cent = train_ivf_centroids(spark, ivf_training_sample(emb))
-    exact1 = (ann_cosine_topk(spark, sf_dir)
-              .filter(F.col("rn") == 1)
-              .select("query_id",
-                      F.col("neighbor_id").alias("exact_nn"),
-                      F.col("cos").alias("exact_cos")))
-    qv = emb.select(F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qv"), F.col("norm").alias("qn"))
-    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("v").alias("nv"), F.col("norm").alias("nn_"))
-    tcos = F.expr(vecfold.fold_dot("qv", "nv"))
+    exact1 = _exact_top1(spark, sf_dir)
     dist = F.expr(vecfold.fold_sq_dist("sv", "cbv"))
     out = None
     for pm in M_SWEEP:
@@ -1601,43 +1434,19 @@ def ann_pq_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr(f"cast(round(({total}) * 1000000) as bigint)"))
             .cast("long").alias("recon_err_micro"))
         # --- trained IVF-PQ search quality at this M -----------------
-        top1 = (_ivf_pq_search(emb, cent, n_probe=N_PROBE, pq_m=pm)
-                .filter(F.col("rank") == 1)
-                .select("query_id", "neighbor_id"))
-        chosen = (qv.join(F.broadcast(top1), "query_id")
-                  .join(F.broadcast(nv.join(
-                      F.broadcast(top1.select("neighbor_id").distinct()),
-                      "neighbor_id")), "neighbor_id")
-                  .select("query_id", "neighbor_id",
-                          F.round(tcos / (F.col("qn") * F.col("nn_")), 6)
-                          .alias("adc_cos")))
-        s = (exact1.join(chosen, "query_id", "left")
-             .agg(F.count(F.lit(1)).alias("n_queries"),
-                  F.sum(F.when(F.col("neighbor_id").isNotNull(), 1)
-                        .otherwise(0)).alias("n_answered"),
-                  F.sum(F.when(F.col("neighbor_id") == F.col("exact_nn"),
-                               1).otherwise(0)).alias("n_hit1"),
-                  F.sum(F.when(F.col("neighbor_id").isNotNull(),
-                               F.round((F.col("exact_cos")
-                                        - F.col("adc_cos"))
-                                       * 1_000_000).cast("long"))
-                        .otherwise(0)).alias("cos_gap_micro"))
+        top1 = _adc_top1(
+            emb, _ivf_pq_search(emb, cent, n_probe=N_PROBE, pq_m=pm))
+        s = (_recall_at_1(exact1, top1)
              .crossJoin(F.broadcast(recon))
              .select(F.lit(pm).alias("m_subspaces"),
                      F.lit(ps).alias("sub_dim"),
                      F.lit(pm).alias("code_bytes"),
-                     "recon_err_micro", "n_queries", "n_answered",
-                     "n_hit1",
-                     F.expr("n_hit1 * 1000000 div n_queries")
-                     .alias("recall1_ppm"),
-                     "cos_gap_micro"))
+                     "recon_err_micro", *RECALL_COLS))
         out = s if out is None else out.unionByName(s)
     return out.orderBy("m_subspaces")
 
 
 def _pq_m_sweep_oracle() -> str:
-    from ..registry import oracle_sql_of
-
     pre = _trained_ivf_pre()
     cent_sql = (f"SELECT cell_id, "
                 f"list_transform(cq, c -> c / {Q_SCALE}.0) AS cv "
@@ -1646,9 +1455,7 @@ def _pq_m_sweep_oracle() -> str:
     blocks.append("embx AS (SELECT vec_id,"
                   " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
                   " FROM embeddings)")
-    blocks.append(f"exact AS (SELECT query_id, neighbor_id AS exact_nn,"
-                  f" cos AS exact_cos FROM"
-                  f" ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1)")
+    blocks.append(_duck_exact_top1())
     for pm in M_SWEEP:
         ps = DIM // pm
         slices = " UNION ALL ".join(
@@ -1679,29 +1486,9 @@ def _pq_m_sweep_oracle() -> str:
 )""")
         blocks.append(
             f"pqm{pm} AS ({_ivf_pq_oracle(pre=pre, cent_sql=cent_sql, n_probe=N_PROBE, pq_m=pm)})")
-        selects.append(f"""
-SELECT {pm} AS m_subspaces, {ps} AS sub_dim, {pm} AS code_bytes,
-       (SELECT recon_err_micro FROM recon{pm}) AS recon_err_micro,
-       CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_answered,
-       CAST(SUM(CASE WHEN i.neighbor_id = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit1,
-       CAST(SUM(CASE WHEN i.neighbor_id = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
-       CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL
-                THEN CAST(ROUND((e.exact_cos - i.adc_cos) * 1000000)
-                          AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS cos_gap_micro
-FROM exact e LEFT JOIN (
-    SELECT t.query_id, t.neighbor_id,
-           ROUND(list_dot_product(q.v, n.v)
-                 / (sqrt(list_dot_product(q.v, q.v))
-                    * sqrt(list_dot_product(n.v, n.v))), 6) AS adc_cos
-    FROM (SELECT query_id, neighbor_id FROM pqm{pm} WHERE rank = 1) t
-    JOIN embx q ON q.vec_id = t.query_id
-    JOIN embx n ON n.vec_id = t.neighbor_id
-) i USING (query_id)""")
+        selects.append(_duck_recall_at_1(_duck_adc_top1(f"pqm{pm}"), f"""\
+{pm} AS m_subspaces, {ps} AS sub_dim, {pm} AS code_bytes,
+       (SELECT recon_err_micro FROM recon{pm}) AS recon_err_micro,"""))
     u = "\nUNION ALL\n".join(selects)
     return ("WITH " + ",\n".join(blocks)
             + f"\nSELECT * FROM (\n{u}\n) ORDER BY m_subspaces")
@@ -2049,6 +1836,7 @@ register("ann_pq_residual_gain", ann_pq_residual_gain,
 
 # --------------------------------------- LSH bits-per-table sweep
 BITS_SWEEP = (3, 4, 6)  # table widths over the FIXED 12-plane budget
+BITS_LAYOUTS = tuple((b, t) for b in BITS_SWEEP for t in range(N_PLANES // b))
 
 
 def ann_lsh_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2074,161 +1862,45 @@ def ann_lsh_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     only pair-scale frame; the volume row is ONE keys=[] aggregate
     stacked to 3 rows; panel scoring joins are panel-sized. Never
     all-pairs, never a per-split re-join."""
-    emb = _emb(spark, sf_dir)
-    planes = _planes()
-    for p in range(N_PLANES):
-        proj = vecfold.fold_dot_const("v", planes[p])
-        emb = emb.withColumn(
-            f"sb{p}",
-            F.expr(f"cast(CASE WHEN {proj} > 0 THEN 1 ELSE 0 END"
-                   " as bigint)"))
-    emb = emb.cache()
-    idx = None
-    for bits in BITS_SWEEP:
-        for t in range(N_PLANES // bits):
-            bkt = " + ".join(f"sb{t * bits + r} * {1 << r}"
-                             for r in range(bits))
-            part = emb.select("vec_id", F.lit(bits).alias("bits"),
-                              F.lit(t).alias("tbl"),
-                              F.expr(bkt).alias("bkt"))
-            idx = part if idx is None else idx.unionByName(part)
-    a, b = idx.alias("a"), idx.alias("b")
-    pairq = (a.join(b, (F.col("a.bits") == F.col("b.bits"))
-                    & (F.col("a.tbl") == F.col("b.tbl"))
-                    & (F.col("a.bkt") == F.col("b.bkt"))
-                    & (F.col("a.vec_id") != F.col("b.vec_id")))
-             .select(F.col("a.bits").alias("bits"),
-                     F.col("a.vec_id").alias("a_id"),
-                     F.col("b.vec_id").alias("b_id"))
-             .dropDuplicates(["bits", "a_id", "b_id"])
-             .cache())
+    sigs = _hp_sigs(spark, sf_dir)
+    pairq = _bucket_pairs(_hp_index(sigs, BITS_LAYOUTS), "!=").cache()
     # all 3 volume cells in ONE keys=[] aggregate over the pair table
     vols = pairq.agg(*[
         F.coalesce(F.sum(F.expr(
-            f"cast(bits = {bb} and a_id < b_id as int)")), F.lit(0))
+            f"cast(bits = {bb} and vec_id < neighbor_id as int)")), F.lit(0))
         .cast("long").alias(f"v_{bb}") for bb in BITS_SWEEP])
     vol_stack = ", ".join(
         f"{bb}, {N_PLANES // bb}, v_{bb}" for bb in BITS_SWEEP)
     vol_rows = vols.select(F.expr(
         f"stack({len(BITS_SWEEP)}, {vol_stack})"
         " AS (bits_per_table, n_tables, n_cand_pairs)"))
-    exact1 = (ann_cosine_topk(spark, sf_dir)
-              .filter(F.col("rn") == 1)
-              .select("query_id",
-                      F.col("neighbor_id").alias("exact_nn"),
-                      F.col("cos").alias("exact_cos")))
-    va = emb.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"),
-                    F.col("norm").alias("na"))
-    vb = emb.select(F.col("vec_id").alias("b_id"),
-                    F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.expr(vecfold.fold_dot("va", "vb"))
-    wt = Window.partitionBy("bits", "query_id").orderBy(
-        F.col("cos").desc(), "neighbor_id")
-    tops = (pairq.filter(F.col("a_id") < N_QUERIES)
-            .join(maybe_broadcast(va, sf_dir, "embeddings"), "a_id")
-            .join(maybe_broadcast(vb, sf_dir, "embeddings"), "b_id")
-            .select("bits", F.col("a_id").alias("query_id"),
-                    F.col("b_id").alias("neighbor_id"),
-                    (dot / (F.col("na") * F.col("nb"))).alias("cos"))
-            .withColumn("rn", F.row_number().over(wt))
-            .filter(F.col("rn") == 1)
-            .select(F.col("bits").alias("bits_per_table"), "query_id",
-                    F.col("neighbor_id").alias("lsh_nn"),
-                    F.round("cos", 6).alias("lsh_cos")))
-    grid_keys = exact1.crossJoin(
-        F.broadcast(vol_rows.select("bits_per_table")))
-    stats = (grid_keys.join(tops, ["bits_per_table", "query_id"], "left")
-             .groupBy("bits_per_table")
-             .agg(F.count(F.lit(1)).alias("n_queries"),
-                  F.sum(F.when(F.col("lsh_nn").isNotNull(), 1)
-                        .otherwise(0)).alias("n_answered"),
-                  F.sum(F.when(F.col("lsh_nn") == F.col("exact_nn"), 1)
-                        .otherwise(0)).alias("n_hit1"),
-                  F.sum(F.when(F.col("lsh_nn").isNotNull(),
-                               F.round((F.col("exact_cos")
-                                        - F.col("lsh_cos"))
-                                       * 1_000_000).cast("long"))
-                        .otherwise(0)).alias("cos_gap_micro")))
+    tops = _top1(_with_cos(pairq.filter(F.col("vec_id") < N_QUERIES),
+                           sigs, sf_dir), ["bits"])
+    stats = _recall_at_1(_exact_top1(spark, sf_dir),
+                         tops.withColumnRenamed("bits", "bits_per_table"),
+                         vol_rows.select("bits_per_table"))
     return (stats.join(F.broadcast(vol_rows), ["bits_per_table"])
             .select("bits_per_table", "n_tables", "n_cand_pairs",
-                    "n_queries", "n_answered", "n_hit1",
-                    F.expr("n_hit1 * 1000000 div n_queries")
-                    .alias("recall1_ppm"),
-                    "cos_gap_micro")
+                    *RECALL_COLS)
             .orderBy("bits_per_table"))
 
 
 def _bits_sweep_oracle() -> str:
-    from ..registry import oracle_sql_of
-
-    planes = _planes()
-    sig_cols = []
-    for p in range(N_PLANES):
-        arr = "[" + ", ".join(f"CAST({s} AS DOUBLE)"
-                              for s in planes[p]) + "]"
-        sig_cols.append(
-            f"CAST(CASE WHEN list_dot_product(v, {arr}) > 0"
-            f" THEN 1 ELSE 0 END AS BIGINT) AS sb{p}")
-    idx_parts = []
-    for bits in BITS_SWEEP:
-        for t in range(N_PLANES // bits):
-            bkt = " + ".join(f"sb{t * bits + r} * {1 << r}"
-                             for r in range(bits))
-            idx_parts.append(
-                f"    SELECT vec_id, {bits} AS bits, {t} AS tbl,"
-                f" {bkt} AS bkt FROM sig")
-    idx_union = "\n    UNION ALL\n".join(idx_parts)
-    blocks = f"""exact AS (
-    SELECT query_id, neighbor_id AS exact_nn, cos AS exact_cos
-    FROM ({oracle_sql_of('ann_cosine_topk')}) e WHERE rn = 1
-), embx AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-), sig AS (
-    SELECT vec_id, {', '.join(sig_cols)} FROM embx
-), idx AS (
-{idx_union}
+    blocks = f"""{_duck_exact_top1()}, {_duck_hp_sigs()}, idx AS (
+    {_duck_hp_index('sig', BITS_LAYOUTS)}
 ), pairq AS (
-    SELECT DISTINCT a.bits, a.vec_id AS a_id, b.vec_id AS b_id
-    FROM idx a JOIN idx b
-      ON b.bits = a.bits AND b.tbl = a.tbl AND b.bkt = a.bkt
-     AND b.vec_id <> a.vec_id
+    {_duck_bucket_pairs('idx', '!=')}
 ), panel AS (
-    SELECT pr.bits, pr.a_id AS query_id, pr.b_id AS neighbor_id,
-           list_dot_product(q.v, n.v)
-           / (sqrt(list_dot_product(q.v, q.v))
-              * sqrt(list_dot_product(n.v, n.v))) AS cos
-    FROM pairq pr
-    JOIN embx q ON q.vec_id = pr.a_id
-    JOIN embx n ON n.vec_id = pr.b_id
-    WHERE pr.a_id < {N_QUERIES}
+    {_duck_with_cos(f'(SELECT * FROM pairq WHERE vec_id < {N_QUERIES})')}
 )"""
     selects = []
     for bits in BITS_SWEEP:
-        selects.append(f"""
-SELECT {bits} AS bits_per_table, {N_PLANES // bits} AS n_tables,
-       (SELECT CAST(COALESCE(SUM(CASE WHEN a_id < b_id
+        selects.append(_duck_recall_at_1(
+            _duck_top1(f"SELECT * FROM panel WHERE bits = {bits}"),
+            f"""{bits} AS bits_per_table, {N_PLANES // bits} AS n_tables,
+       (SELECT CAST(COALESCE(SUM(CASE WHEN vec_id < neighbor_id
                              THEN 1 ELSE 0 END), 0) AS BIGINT)
-        FROM pairq WHERE bits = {bits}) AS n_cand_pairs,
-       CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CASE WHEN l.lsh_nn IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_answered,
-       CAST(SUM(CASE WHEN l.lsh_nn = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit1,
-       CAST(SUM(CASE WHEN l.lsh_nn = e.exact_nn THEN 1 ELSE 0 END)
-            AS BIGINT) * 1000000 // COUNT(*) AS recall1_ppm,
-       CAST(SUM(CASE WHEN l.lsh_nn IS NOT NULL
-                THEN CAST(ROUND((e.exact_cos - l.lsh_cos) * 1000000)
-                          AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS cos_gap_micro
-FROM exact e LEFT JOIN (
-    SELECT query_id, neighbor_id AS lsh_nn, ROUND(cos, 6) AS lsh_cos
-    FROM (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY cos DESC, neighbor_id) AS rn
-          FROM panel WHERE bits = {bits})
-    WHERE rn = 1
-) l USING (query_id)""")
+        FROM pairq WHERE bits = {bits}) AS n_cand_pairs,"""))
     u = "\nUNION ALL\n".join(selects)
     return ("WITH " + blocks
             + f"\nSELECT * FROM (\n{u}\n) ORDER BY bits_per_table")

@@ -268,6 +268,62 @@ def test_minhash_queries_share_one_signature_cache(spark, sf_small):
         spark.catalog.clearCache()
 
 
+def test_hyperplane_queries_share_one_signature_cache(spark, sf_small):
+    """The hyperplane-LSH queries read ONE cached signature relation
+    (``similarity._hp_sigs``: vectors plus the 12-bit ``hp``) and slice
+    every bucket layout from it after the cache; a per-layout cache
+    would add one session-long entry per layout. The other two entries
+    are the bits sweep's pair table, which its volume and scoring
+    branches both read, and the exact panel's vectors
+    (``ann_cosine_topk``)."""
+    spark.catalog.clearCache()
+    try:
+        for name in ("ann_lsh_bucketed", "ann_lsh_multiprobe",
+                     "ann_lsh_bits_sweep"):
+            _Q[name].build(spark, sf_small).collect()
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.numCachedEntries() == 3
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_hp_signature_matches_independent_reference(spark, sf_small):
+    """Every vector's 12-bit ``hp`` from the Spark helper and from the
+    DuckDB twin equals a plain-Python reference: bit p is set when the
+    left fold ``acc += x * s`` over plane p, in index order (the order
+    of Spark's ``aggregate``), ends above zero."""
+    import duckdb
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from impractical_impala_spark.queries.similarity import (
+        N_PLANES, _plane_sign)
+    from impractical_impala_spark.queries import similarity
+
+    path = f"{sf_small}/embeddings.parquet"
+    t = pq.read_table(path, columns=["vec_id", "embedding"]).to_pydict()
+    want = {}
+    for vec_id, emb in zip(t["vec_id"], t["embedding"]):
+        hp = 0
+        for p in range(N_PLANES):
+            acc = 0.0
+            for j, x in enumerate(emb):
+                acc += float(x) * _plane_sign(p, j)
+            if acc > 0:
+                hp |= 1 << p
+        want[vec_id] = hp
+    spark_hp = {r.vec_id: r.hp for r in similarity._emb(spark, sf_small)
+                .select("vec_id", F.expr(similarity._hp_expr("v"))
+                        .alias("hp")).collect()}
+    duck_hp = dict(duckdb.connect().execute(
+        f"SELECT vec_id, {similarity._duck_hp('v')} FROM ("
+        "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))"
+        f" AS v FROM read_parquet('{path}'))").fetchall())
+    assert len(want) > 0
+    assert spark_hp == want
+    assert duck_hp == want
+
+
 def test_global_rank_has_no_data_funnel(spark, sf_small):
     """q_global_rank's big-table window must be keyed on the range id
     (range exchange + hash exchange on __range_id); the only
